@@ -2167,7 +2167,7 @@ def margin_bitext_pairs(
     shuffle per direction.  This exact all-pairs form is the verify
     tier — quadratic in corpus size, excluded from the bench scale
     paths like the other exact all-pairs operators;
-    :func:`margin_bitext_pairs_cells` is the candidate-bounded 100 TB
+    :func:`margin_bitext_pairs_lsh` is the candidate-bounded scale
     shape with the identical scoring tail.
     """
     s = src.select(
@@ -2183,50 +2183,6 @@ def margin_bitext_pairs(
     cos = dot(F.col("_sv"), F.col("_tv")) / (F.col("_sn") * F.col("_tn"))
     scored = (
         s.crossJoin(F.broadcast(t))
-        .withColumn(
-            "cos_q",
-            F.floor(cos * F.lit(1e6) + F.lit(0.5)).cast("long"),
-        )
-        .select("src_id", "tgt_id", "cos_q")
-    )
-    return _margin_from_scored(scored, k, margin_threshold)
-
-
-def margin_bitext_pairs_cells(
-    src: DataFrame,
-    tgt: DataFrame,
-    id_col: str,
-    vec_col: str,
-    cell_col: str,
-    k: int = 4,
-    margin_threshold: float = 1.05,
-) -> DataFrame:
-    """The candidate-bounded scale shape of :func:`margin_bitext_pairs`
-    — the IVF posture applied to bitext mining: both corpora carry a
-    quantizer cell id (here a label column; at 100 TB the learned
-    k-means/IVF cell, with the corpora physically partitioned by it),
-    candidate pairs are the SAME-CELL equi-join — a plain shuffle
-    join, NEITHER side broadcast, volume bounded by per-cell
-    occupancy — and the identical rank/sum/margin windows run over
-    the candidates.  k-NN means are then within-cell means, the
-    standard IVF approximation (recall tunable by cell size /
-    multi-assignment, auditable exactly like `ann_recall_audit`).
-    """
-    s = src.select(
-        F.col(id_col).alias("src_id"),
-        F.col(cell_col).alias("_cell"),
-        F.col(vec_col).alias("_sv"),
-        l2_norm(F.col(vec_col)).alias("_sn"),
-    )
-    t = tgt.select(
-        F.col(id_col).alias("tgt_id"),
-        F.col(cell_col).alias("_cell"),
-        F.col(vec_col).alias("_tv"),
-        l2_norm(F.col(vec_col)).alias("_tn"),
-    )
-    cos = dot(F.col("_sv"), F.col("_tv")) / (F.col("_sn") * F.col("_tn"))
-    scored = (
-        s.join(t, "_cell")
         .withColumn(
             "cos_q",
             F.floor(cos * F.lit(1e6) + F.lit(0.5)).cast("long"),
@@ -2384,9 +2340,8 @@ def hard_negatives(
     Same determinism contract as :func:`cosine_topk` (rounded sims,
     id-ascending tie-break) and the same plan shape: broadcast probe
     fan-out + one corpus scan + one probe-keyed window.  This is the
-    exact/verify tier; :func:`hard_negatives_cells` is the
-    cell-routed 100 TB shape — hard negatives live NEAR the probe by
-    construction, so cell routing loses little recall.
+    exact/verify tier; :func:`hard_negatives_lsh` is the
+    candidate-bounded scale shape with the identical tail.
     """
     p = probes.select(
         F.col(id_col).alias("query_id"),
@@ -2432,14 +2387,12 @@ def hard_negatives(
 def signature_cell(vec_col: Column, dim: int, n_planes: int, table: int = 0) -> Column:
     """Sign-LSH cell id: bit ``p`` set iff ``dot(v, plane_p) >= 0``
     over :func:`deterministic_planes` — a LABEL-INDEPENDENT,
-    locality-preserving quantizer (``2**n_planes`` cells).  Used where
-    the class label cannot double as the IVF cell (hard-negative
-    mining excludes same-label candidates, so label-cells would empty
-    the candidate set); md5-derived constants keep it replayable by
-    an external SQL oracle.  At 100 TB this is the cell id you
-    compute ONCE at ingest and physically partition by — here it is
-    an inline expression (n_planes * dim literal constants through
-    one codegen'd fold per plane, no join, no shuffle).
+    locality-preserving quantizer (``2**n_planes`` cells), built as an
+    inline Catalyst expression (n_planes * dim literal constants
+    through one codegen'd fold per plane, no join, no shuffle).  It is
+    the independent reference the Arrow :func:`lsh_signatures` kernel
+    is tested against; md5-derived constants keep it replayable by an
+    external SQL oracle.
     """
     planes = deterministic_planes(n_planes, dim, table)
     bits = [
@@ -2453,117 +2406,6 @@ def signature_cell(vec_col: Column, dim: int, n_planes: int, table: int = 0) -> 
     for b in bits[1:]:
         cell = cell + b
     return cell
-
-
-def hard_negatives_cells(
-    corpus: DataFrame,
-    probes: DataFrame,
-    id_col: str,
-    vec_col: str,
-    label_col: str,
-    dim: int,
-    k: int = 5,
-    max_sim: float = 0.95,
-    nprobe: int = 2,
-    n_planes: int = 3,
-    sim_decimals: int = 6,
-) -> DataFrame:
-    """The cell-routed scale shape of :func:`hard_negatives` (the IVF
-    posture, mirroring :func:`margin_bitext_pairs_cells`): candidates
-    are bounded by cell routing instead of a broadcast probe fan-out,
-    so an unbounded probe set never broadcasts and per-probe work is
-    per-cell occupancy, not |corpus|.
-
-    Mechanics:
-
-    - every corpus vector carries a :func:`signature_cell` id
-      (label-independent — the class label is the EXCLUSION key here,
-      so unlike :func:`ivf_topk` it cannot also be the cell);
-    - per-cell centroids (same rounded elementwise-mean coarse index
-      as :func:`label_centroids`) route each probe to its ``nprobe``
-      nearest cells;
-    - candidates are the same-cell pairs via a PLAIN shuffle
-      equi-join on the cell id — neither side broadcast (at 100 TB:
-      corpus physically partitioned by cell => partition pruning +
-      co-located join);
-    - then the identical different-label filter, false-negative cap
-      (``sim < max_sim``) and per-probe top-k window as the exact
-      tier.
-
-    Each corpus vector lives in exactly ONE cell, so a (probe,
-    neighbor) pair joins at most once — no candidate dedup needed.
-    Recall vs the exact tier is tunable via ``nprobe``/``n_planes``
-    and audited by the catalog's recall-audit queries.
-    """
-    cell = signature_cell(F.col(vec_col), dim, n_planes)
-    c = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(label_col).alias("_cl"),
-        F.col(vec_col).alias("_cv"),
-        l2_norm(F.col(vec_col)).alias("_cn"),
-        cell.alias("_cell"),
-    )
-    # Coarse index: per-cell rounded centroids (2**n_planes rows).
-    avgs = [
-        F.round(F.avg(F.col("_cv").getItem(i).cast("double")), 6)
-        for i in range(dim)
-    ]
-    cents = c.groupBy("_cell").agg(F.array(*avgs).alias("centroid"))
-    p = probes.select(
-        F.col(id_col).alias("query_id"),
-        F.col(label_col).alias("_ql"),
-        F.col(vec_col).alias("_qv"),
-        l2_norm(F.col(vec_col)).alias("_qn"),
-    )
-    # Zero-norm guard (ADVICE r13): a zero probe vector or an all-zero
-    # rounded centroid would make the cosine NULL/NaN, and NULL ordering
-    # in the routing window can diverge across engines.  Such pairs get
-    # a deterministic sentinel BELOW any real cosine (-2.0), so routing
-    # degrades to cell-ascending order instead of engine-defined chaos;
-    # the oracle replays the same CASE.
-    _route_den = F.col("_qn") * l2_norm(F.col("centroid"))
-    routed = p.crossJoin(F.broadcast(cents)).withColumn(
-        "_csim",
-        F.when(
-            _route_den > 0,
-            F.round(dot(F.col("_qv"), F.col("centroid")) / _route_den, 6),
-        ).otherwise(F.lit(-2.0)),
-    )
-    w_route = Window.partitionBy("query_id").orderBy(
-        F.col("_csim").desc(), F.col("_cell").asc()
-    )
-    probe_cells = (
-        routed.withColumn("_r", F.row_number().over(w_route))
-        .filter(F.col("_r") <= nprobe)
-        .select("query_id", "_ql", "_qv", "_qn", "_cell")
-    )
-    scored = (
-        c.join(probe_cells, "_cell")  # plain shuffle equi-join, no broadcast
-        .filter(F.col("_cl") != F.col("_ql"))
-        .withColumn(
-            "sim",
-            F.round(
-                dot(F.col("_qv"), F.col("_cv")) / (F.col("_qn") * F.col("_cn")),
-                sim_decimals,
-            ),
-        )
-        .filter(F.col("sim") < max_sim)
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("sim").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id",
-            F.col("_ql").alias("query_label"),
-            "neighbor_id",
-            F.col("_cl").alias("neighbor_label"),
-            F.col("rank").cast("long").alias("rank"),
-            "sim",
-        )
-    )
 
 
 def hard_negatives_lsh(
@@ -2584,8 +2426,8 @@ def hard_negatives_lsh(
     Hamming-1 machinery (VERDICT r15 #3) extended from the near-dup
     and bitext miners to the hard-negative tier.
 
-    The cell-routed tier (:func:`hard_negatives_cells`) routes probes
-    by CENTROID similarity over single-table sign-LSH cells — an IVF
+    Routing probes by CENTROID similarity over single-table sign-LSH
+    cells (the retired cell-routed tier, 52% mean recall) is an IVF
     posture whose per-probe coverage is nprobe cells chosen by a
     geometry the hyperplane partition doesn't actually encode (cell
     centroids of hyperplane regions are arbitrary, and the routing

@@ -64,7 +64,8 @@ def dedup_cluster_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
     keep-rule production dedup uses so re-runs keep the same docs.
 
     Plan shape: the pair list is LSH-band-bounded (linear), connected
-    components is O(log n) label-prop rounds, and the keep decision is
+    components is O(component diameter) label-prop rounds (shallow
+    near-dup clusters converge in a handful), and the keep decision is
     one window over ``cluster_id`` — clusters are tiny (bounded by
     collision neighborhoods), so the window partition never skews.
     Unclustered docs pass through as their own canonical

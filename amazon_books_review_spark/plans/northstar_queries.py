@@ -388,68 +388,6 @@ WHERE margin > {BITEXT_MARGIN!r}
 """
 
 
-def bitext_margin_mining_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The candidate-bounded scale shape of bitext_margin_mining: the
-    quantizer cell (the embeddings ``label`` column; at 100 TB the
-    learned IVF cell with the corpora physically partitioned by it)
-    bounds candidates to SAME-CELL pairs via a plain shuffle
-    equi-join — neither corpus broadcast — and the identical
-    rank/sum/margin scoring tail runs over the candidates
-    (:func:`functions.similarity.margin_bitext_pairs_cells`)."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    src = emb.filter(F.col("vec_id") % 2 == 0)
-    tgt = emb.filter(F.col("vec_id") % 2 == 1)
-    return similarity.margin_bitext_pairs_cells(
-        src, tgt, "vec_id", "embedding", "label",
-        k=BITEXT_K, margin_threshold=BITEXT_MARGIN,
-    )
-
-
-BITEXT_MARGIN_CELLS_ORACLE = f"""
-WITH v AS (
-    SELECT vec_id, label, embedding::DOUBLE[] AS e,
-           sqrt(list_inner_product(embedding::DOUBLE[], embedding::DOUBLE[])) AS nrm
-    FROM embeddings
-), s AS (
-    SELECT vec_id AS src_id, label, e, nrm FROM v WHERE vec_id % 2 = 0
-), t AS (
-    SELECT vec_id AS tgt_id, label, e, nrm FROM v WHERE vec_id % 2 = 1
-), scored AS (
-    SELECT src_id, tgt_id,
-           CAST(floor(list_inner_product(s.e, t.e) / (s.nrm * t.nrm)
-                      * 1000000 + 0.5) AS BIGINT) AS cos_q
-    FROM s JOIN t USING (label)
-), ranked AS (
-    SELECT *,
-           row_number() OVER (PARTITION BY src_id
-                              ORDER BY cos_q DESC, tgt_id ASC) AS rank_x,
-           row_number() OVER (PARTITION BY tgt_id
-                              ORDER BY cos_q DESC, src_id ASC) AS rank_y
-    FROM scored
-), sums AS (
-    SELECT *,
-           sum(CASE WHEN rank_x <= {BITEXT_K} THEN cos_q END)
-               OVER (PARTITION BY src_id) AS sum_x,
-           sum(CASE WHEN rank_x <= {BITEXT_K} THEN 1 END)
-               OVER (PARTITION BY src_id) AS cnt_x,
-           sum(CASE WHEN rank_y <= {BITEXT_K} THEN cos_q END)
-               OVER (PARTITION BY tgt_id) AS sum_y,
-           sum(CASE WHEN rank_y <= {BITEXT_K} THEN 1 END)
-               OVER (PARTITION BY tgt_id) AS cnt_y
-    FROM ranked
-), margins AS (
-    SELECT src_id, tgt_id, cos_q,
-           round(2.0 * cos_q
-                 / (sum_x * 1.0 / cnt_x + sum_y * 1.0 / cnt_y), 6) AS margin
-    FROM sums
-    WHERE rank_x <= {BITEXT_K} AND rank_y <= {BITEXT_K}
-)
-SELECT src_id, tgt_id, cos_q, margin
-FROM margins
-WHERE margin > {BITEXT_MARGIN!r}
-"""
-
-
 HARDNEG_MAX_SIM = 0.95
 
 
@@ -492,313 +430,6 @@ WITH v AS (
 SELECT query_id, query_label, neighbor_id, neighbor_label,
        CAST(rank AS BIGINT) AS rank, sim
 FROM ranked WHERE rank <= {TOPK_K}
-"""
-
-
-def bitext_cells_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Recall/precision of the cell-routed bitext tier against the
-    exact tier (VERDICT r12 #4) — the bitext counterpart of
-    ann_recall_audit: the cells path bounds candidates to same-cell
-    pairs AND computes k-NN means within-cell, so its mined pair set
-    both misses cross-cell pairs (recall < 100) and can admit pairs
-    whose within-cell margin clears the bar only because the cell-mean
-    denominator is smaller (precision < 100).  Both tiers are
-    engine-exact (integer-quantized cosines, deterministic
-    tie-breaks), so the audit is replayed by DuckDB to the integer —
-    no tolerance band.  At 100 TB this query IS the cell-occupancy
-    tuning loop: mine a corpus sample both ways after each
-    re-clustering and read recall/precision before committing the
-    full run."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    src = emb.filter(F.col("vec_id") % 2 == 0)
-    tgt = emb.filter(F.col("vec_id") % 2 == 1)
-    exact = similarity.margin_bitext_pairs(
-        src, tgt, "vec_id", "embedding",
-        k=BITEXT_K, margin_threshold=BITEXT_MARGIN,
-    ).select("src_id", "tgt_id")
-    cells = similarity.margin_bitext_pairs_cells(
-        src, tgt, "vec_id", "embedding", "label",
-        k=BITEXT_K, margin_threshold=BITEXT_MARGIN,
-    ).select("src_id", "tgt_id")
-    ne = exact.agg(F.count(F.lit(1)).alias("n_exact"))
-    nc = cells.agg(F.count(F.lit(1)).alias("n_cells"))
-    nh = exact.join(cells, ["src_id", "tgt_id"]).agg(
-        F.count(F.lit(1)).alias("n_hit")
-    )
-    return (
-        ne.crossJoin(F.broadcast(nc))
-        .crossJoin(F.broadcast(nh))
-        .select(
-            "n_exact",
-            "n_cells",
-            "n_hit",
-            # empty-tier guard (ADVICE r13): Spark's `div` yields NULL on a
-            # zero denominator while DuckDB's `//` differs — define the
-            # degenerate cases instead (no exact pairs => nothing to miss,
-            # recall 100; no mined pairs => nothing spurious, precision 100)
-            F.expr(
-                "CASE WHEN n_exact = 0 THEN 100"
-                " ELSE n_hit * 100 div n_exact END"
-            ).cast("long").alias("recall_pct"),
-            F.expr(
-                "CASE WHEN n_cells = 0 THEN 100"
-                " ELSE n_hit * 100 div n_cells END"
-            ).cast("long").alias("precision_pct"),
-        )
-    )
-
-
-BITEXT_CELLS_RECALL_ORACLE = f"""
-WITH exact_pairs AS ({BITEXT_MARGIN_ORACLE}),
-cells_pairs AS ({BITEXT_MARGIN_CELLS_ORACLE}),
-counts AS (
-    SELECT (SELECT count(*) FROM exact_pairs) AS n_exact,
-           (SELECT count(*) FROM cells_pairs) AS n_cells,
-           (SELECT count(*)
-            FROM exact_pairs e JOIN cells_pairs c
-              ON e.src_id = c.src_id AND e.tgt_id = c.tgt_id) AS n_hit
-)
-SELECT n_exact, n_cells, n_hit,
-       CAST(CASE WHEN n_exact = 0 THEN 100
-                 ELSE n_hit * 100 // n_exact END AS BIGINT) AS recall_pct,
-       CAST(CASE WHEN n_cells = 0 THEN 100
-                 ELSE n_hit * 100 // n_cells END AS BIGINT) AS precision_pct
-FROM counts
-"""
-
-
-#: Self-sizing + multi-assignment (VERDICT r13 #1/#2): the cluster
-#: count is DERIVED from the corpus cardinality per run (k = clamp(
-#: ceil(n / OCC), KMIN, KMAX) — occupancy stays flat as the corpus
-#: grows; the pinned k=10 measured 36.6x wall for 10x data at sf1 vs
-#: 5.74x with k scaled), and each SOURCE vector probes its NPROBE
-#: nearest cells so near-boundary pairs — the mass a single-assignment
-#: same-cell join structurally misses — become candidates.
-BITEXT_KM_OCC = 50
-BITEXT_KM_KMIN = 2
-BITEXT_KM_KMAX = 4096
-#: Probe width, FIXED by design rather than derived from k: per-source
-#: candidate volume is nprobe x occupancy — constant in the corpus
-#: size only while nprobe is constant (a probe-a-fraction-of-k rule
-#: would make the candidate join quadratic again, the exact r13
-#: scale-killer shape).  Width chosen off the measured recall curve
-#: (r15 sweep, vs the exact tier): nprobe 2/4/8 reads 50/74/96% recall
-#: at sf0.01 and 26/39/58% at sf0.1, with audit wall FLAT (12.6 ->
-#: 14.4 s at sf0.1 — the k-means fit dominates, the widened candidate
-#: join is the cheap part at these scales and stays occupancy-bounded
-#: at any scale).  8 takes the quality knee; past it the lever is
-#: quantizer quality (k, iterations), not more probes.
-BITEXT_KM_NPROBE = 8
-
-
-def bitext_margin_mining_cells_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The bitext cells tier over a LEARNED quantizer (r13): the
-    recall audit measured the label-cell tier at ~8% recall — exactly
-    its same-cell collision mass, because the label column is
-    metadata, not geometry.  This variant routes over the engine's
-    quantized deterministic k-means clusters (the SemDeDup / IVF
-    machinery, `scale_ops_queries._km_fit`) so cells ARE cosine
-    neighborhoods; same candidate shape (plain same-cell shuffle
-    equi-join, neither corpus broadcast) and identical margin tail.
-
-    r14 upgrades, both oracle-replayed:
-
-    - ``k`` is self-sizing (:func:`scale_ops_queries.km_k_for`): the
-      SQL derives the same k from ``count(*)`` with identical integer
-      arithmetic, and the seed CTE takes the first ``rn <= k`` rows.
-    - the SOURCE side is MULTI-ASSIGNED to its ``BITEXT_KM_NPROBE``
-      nearest cells (:func:`scale_ops_queries._km_assign_multiprobe`)
-      — the IVF recall lever that took the ANN audit 30 -> 94.  The
-      target side keeps single assignment, so each (src, tgt) pair
-      still joins at most once (tgt lives in exactly one cell):
-      dedup-free by construction.
-
-    `bitext_kmeans_recall_audit` quantifies the recall this buys; at
-    100 TB the pair is the re-clustering acceptance test for a mining
-    run, exactly like the ann_recall_audit pair for ANN.  Above
-    ``KM_ROUTE_MIN_K`` both the Lloyd passes and the multiprobe
-    routing switch to the two-level coarse-cell strategy (n x 2sqrt(k)
-    instead of n x k); parity scales stay below that bound, so the
-    DuckDB replay is the exact brute tier."""
-    from amazon_books_review_spark.plans.scale_ops_queries import (
-        KM_ROUTE_MIN_K,
-        _km_assign_multiprobe,
-        _km_fit,
-        km_k_for,
-    )
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    n = table_row_count(sf_dir, "embeddings")  # footer, no count job (r19)
-    k = km_k_for(n, BITEXT_KM_OCC, k_min=BITEXT_KM_KMIN, k_max=BITEXT_KM_KMAX)
-    qdf, centroids, assign_pass = _km_fit(spark, sf_dir, k=k)
-    src_cells = _km_assign_multiprobe(
-        qdf.filter(F.col("vec_id") % 2 == 0),
-        centroids,
-        nprobe=BITEXT_KM_NPROBE,
-        route=k >= KM_ROUTE_MIN_K,
-    ).select("vec_id", F.col("cluster").alias("km_cell"))
-    tgt_cells = assign_pass(
-        qdf.filter(F.col("vec_id") % 2 == 1), centroids
-    ).select("vec_id", F.col("cluster").alias("km_cell"))
-    src = emb.join(src_cells, "vec_id")
-    tgt = emb.join(tgt_cells, "vec_id")
-    return similarity.margin_bitext_pairs_cells(
-        src, tgt, "vec_id", "embedding", "km_cell",
-        k=BITEXT_K, margin_threshold=BITEXT_MARGIN,
-    )
-
-
-def _bitext_kmeans_cells_sql() -> str:
-    """The cells-tier bitext SQL over the k-means CTE cells (the
-    BITEXT_MARGIN_CELLS_ORACLE shape with label -> learned cluster).
-
-    Replays BOTH r14 upgrades exactly: the cluster count comes from a
-    ``count(*)``-derived expression with the same integer arithmetic
-    as :func:`scale_ops_queries.km_k_for` (the seed CTE takes the
-    first ``rn <= k`` vectors), and the source side is routed to its
-    ``BITEXT_KM_NPROBE`` nearest FINAL centroids with the same int64
-    distance and ``dist ASC, cid ASC`` tie rule as the operator's
-    stable argsort (``sprobe``, the single-assignment CTE with
-    ``rn = 1`` relaxed to ``rn <= nprobe``)."""
-    from amazon_books_review_spark.plans.scale_ops_queries import (
-        KM_DIM,
-        KM_ITERS,
-        _kmeans_ctes,
-    )
-
-    k_expr = (
-        f"SELECT GREATEST({BITEXT_KM_KMIN}, LEAST({BITEXT_KM_KMAX}, "
-        f"(count(*) + {BITEXT_KM_OCC} - 1) // {BITEXT_KM_OCC})) FROM embeddings"
-    )
-    last_c = f"c{KM_ITERS - 1}"
-    last_a = f"a{KM_ITERS - 1}"
-    dist = (
-        "list_sum(list_transform(range(1, {d} + 1), "
-        "i -> (q.qv[CAST(i AS INT)] - c.cv[CAST(i AS INT)])"
-        " * (q.qv[CAST(i AS INT)] - c.cv[CAST(i AS INT)])))"
-    ).format(d=KM_DIM)
-    prelude = (
-        ",\n".join(_kmeans_ctes(k=k_expr))
-        + f""",
-sprobe AS (
-    SELECT vec_id, cluster FROM (
-        SELECT q.vec_id, c.cid AS cluster,
-               row_number() OVER (PARTITION BY q.vec_id
-                                  ORDER BY CAST({dist} AS BIGINT) ASC, c.cid ASC) AS rn
-        FROM q, {last_c} c
-        WHERE q.vec_id % 2 = 0
-    ) WHERE rn <= {BITEXT_KM_NPROBE}
-)"""
-    )
-    return f"""
-WITH {prelude}, v AS (
-    SELECT vec_id, embedding::DOUBLE[] AS e,
-           sqrt(list_inner_product(embedding::DOUBLE[], embedding::DOUBLE[])) AS nrm
-    FROM embeddings
-), s AS (
-    SELECT sp.vec_id AS src_id, sp.cluster AS cell, v.e, v.nrm
-    FROM sprobe sp JOIN v ON v.vec_id = sp.vec_id
-), t AS (
-    SELECT a.vec_id AS tgt_id, a.cluster AS cell, v.e, v.nrm
-    FROM {last_a} a JOIN v ON v.vec_id = a.vec_id
-    WHERE a.vec_id % 2 = 1
-), scored AS (
-    SELECT src_id, tgt_id,
-           CAST(floor(list_inner_product(s.e, t.e) / (s.nrm * t.nrm)
-                      * 1000000 + 0.5) AS BIGINT) AS cos_q
-    FROM s JOIN t USING (cell)
-), ranked AS (
-    SELECT *,
-           row_number() OVER (PARTITION BY src_id
-                              ORDER BY cos_q DESC, tgt_id ASC) AS rank_x,
-           row_number() OVER (PARTITION BY tgt_id
-                              ORDER BY cos_q DESC, src_id ASC) AS rank_y
-    FROM scored
-), sums AS (
-    SELECT *,
-           sum(CASE WHEN rank_x <= {BITEXT_K} THEN cos_q END)
-               OVER (PARTITION BY src_id) AS sum_x,
-           sum(CASE WHEN rank_x <= {BITEXT_K} THEN 1 END)
-               OVER (PARTITION BY src_id) AS cnt_x,
-           sum(CASE WHEN rank_y <= {BITEXT_K} THEN cos_q END)
-               OVER (PARTITION BY tgt_id) AS sum_y,
-           sum(CASE WHEN rank_y <= {BITEXT_K} THEN 1 END)
-               OVER (PARTITION BY tgt_id) AS cnt_y
-    FROM ranked
-), margins AS (
-    SELECT src_id, tgt_id, cos_q,
-           round(2.0 * cos_q
-                 / (sum_x * 1.0 / cnt_x + sum_y * 1.0 / cnt_y), 6) AS margin
-    FROM sums
-    WHERE rank_x <= {BITEXT_K} AND rank_y <= {BITEXT_K}
-)
-SELECT src_id, tgt_id, cos_q, margin
-FROM margins
-WHERE margin > {BITEXT_MARGIN!r}
-"""
-
-
-def bitext_kmeans_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Recall/precision of the LEARNED-quantizer bitext tier vs the
-    exact tier — same schema as bitext_cells_recall_audit so the two
-    rows compare 1:1; `tests/test_round13.py` pins that the k-means
-    tier's recall is no worse than the label-cell tier's (the
-    quantizer-quality claim, asserted rather than narrated)."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    src_all = emb.filter(F.col("vec_id") % 2 == 0)
-    tgt_all = emb.filter(F.col("vec_id") % 2 == 1)
-    exact = similarity.margin_bitext_pairs(
-        src_all, tgt_all, "vec_id", "embedding",
-        k=BITEXT_K, margin_threshold=BITEXT_MARGIN,
-    ).select("src_id", "tgt_id")
-    cells = bitext_margin_mining_cells_kmeans(spark, sf_dir).select(
-        "src_id", "tgt_id"
-    )
-    ne = exact.agg(F.count(F.lit(1)).alias("n_exact"))
-    nc = cells.agg(F.count(F.lit(1)).alias("n_cells"))
-    nh = exact.join(cells, ["src_id", "tgt_id"]).agg(
-        F.count(F.lit(1)).alias("n_hit")
-    )
-    return (
-        ne.crossJoin(F.broadcast(nc))
-        .crossJoin(F.broadcast(nh))
-        .select(
-            "n_exact",
-            "n_cells",
-            "n_hit",
-            # empty-tier guard (ADVICE r13): Spark's `div` yields NULL on a
-            # zero denominator while DuckDB's `//` differs — define the
-            # degenerate cases instead (no exact pairs => nothing to miss,
-            # recall 100; no mined pairs => nothing spurious, precision 100)
-            F.expr(
-                "CASE WHEN n_exact = 0 THEN 100"
-                " ELSE n_hit * 100 div n_exact END"
-            ).cast("long").alias("recall_pct"),
-            F.expr(
-                "CASE WHEN n_cells = 0 THEN 100"
-                " ELSE n_hit * 100 div n_cells END"
-            ).cast("long").alias("precision_pct"),
-        )
-    )
-
-
-def _bitext_kmeans_recall_oracle() -> str:
-    return f"""
-WITH exact_pairs AS ({BITEXT_MARGIN_ORACLE}),
-cells_pairs AS ({_bitext_kmeans_cells_sql()}),
-counts AS (
-    SELECT (SELECT count(*) FROM exact_pairs) AS n_exact,
-           (SELECT count(*) FROM cells_pairs) AS n_cells,
-           (SELECT count(*)
-            FROM exact_pairs e JOIN cells_pairs c
-              ON e.src_id = c.src_id AND e.tgt_id = c.tgt_id) AS n_hit
-)
-SELECT n_exact, n_cells, n_hit,
-       CAST(CASE WHEN n_exact = 0 THEN 100
-                 ELSE n_hit * 100 // n_exact END AS BIGINT) AS recall_pct,
-       CAST(CASE WHEN n_cells = 0 THEN 100
-                 ELSE n_hit * 100 // n_cells END AS BIGINT) AS precision_pct
-FROM counts
 """
 
 
@@ -877,9 +508,8 @@ def bitext_margin_mining_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Margin bitext mining over sign-LSH Hamming-1 multiprobe
     candidates — THE scale path for bitext mining (VERDICT r15 #1;
     see the constants block above for the decomposition evidence and
-    the measured flat recall curve).  The kmeans-cells entry stays in
-    the catalog as the coarse-quantization audit story; this entry is
-    the miner a 100 TB run should use.
+    the measured flat recall curve) — the miner a 100 TB run should
+    use.
 
     Candidates via :func:`functions.similarity.margin_bitext_pairs_lsh`:
     one :func:`lsh_signatures` matmul pass per side (map-only), the
@@ -1039,11 +669,9 @@ WHERE margin > {BITEXT_MARGIN!r}
 
 def bitext_lsh_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Recall/precision of the LSH-candidate bitext tier vs the exact
-    tier — same schema as bitext_cells_recall_audit and
-    bitext_kmeans_recall_audit so the three tiers compare 1:1 (the
-    r16 acceptance row for the VERDICT r15 #1 swap: >= 85 at sf0.1
-    where the kmeans tier reads 58).  Both tiers deterministic, so
-    DuckDB replays the audit to the integer."""
+    tier (the r16 acceptance row for the VERDICT r15 #1 swap: >= 85
+    at sf0.1 where the retired k-means cells tier read 58).  Both
+    tiers deterministic, so DuckDB replays the audit to the integer."""
     emb = load_table(spark, sf_dir, "embeddings")
     src = emb.filter(F.col("vec_id") % 2 == 0)
     tgt = emb.filter(F.col("vec_id") % 2 == 1)
@@ -1098,191 +726,11 @@ FROM counts
 """
 
 
-HARDNEG_NPROBE = 2
-#: Self-sizing cell count (r14, extending VERDICT r13 #1 to the
-#: hard-negative tier): planes derived from the corpus count at a
-#: target per-cell occupancy, so per-probe candidate volume
-#: (nprobe x n / 2^planes) stays FLAT as the corpus grows instead of
-#: linear.  OCC=64 reproduces the r13 3-plane config at the 500-vector
-#: parity corpora (5 planes at sf0.1's 2000).
-HARDNEG_CELL_OCC = 64
-HARDNEG_MIN_PLANES = 2
-#: 24 (r16, closing VERDICT r15 #3): the same ceiling lift the top-k
-#: and near-dup families got in r15 — the SQL replay inlines
-#: MAX_PLANES hyperplanes and masks sig % 2^b down, so this constant
-#: IS the self-sizing ceiling.  At 12 the clamp bound at ~2^12 x 64
-#: ~= 262k vectors; 24 moves it to ~2^24 x 64 ~= 1.07B.  Engine
-#: behavior below the old ceiling is IDENTICAL (the derivation
-#: returns the same b) — only the oracle text changes; the plane
-#: family's prefix-stability is pytest-pinned.
-HARDNEG_MAX_PLANES = 24
-
-
-def hard_negative_mining_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The cell-routed scale shape of hard_negative_mining (VERDICT
-    r12 #3): corpus vectors carry a label-INDEPENDENT sign-LSH cell id
-    (the class label is the exclusion key here, so it cannot double
-    as the IVF cell), per-cell centroids route each probe to its
-    nprobe nearest cells, and candidates are the same-cell pairs via
-    a plain shuffle equi-join — no broadcast of the probe set — then
-    the identical different-label / false-negative-cap / top-k tail
-    as the exact tier (:func:`functions.similarity.hard_negatives_cells`).
-
-    The plane count self-sizes from the corpus count
-    (:func:`functions.similarity.lsh_planes_for`, occupancy
-    ``HARDNEG_CELL_OCC``) — the oracle replays the derivation with the
-    mask trick (MAX_PLANES prefix-stable planes inlined, cell id
-    masked to the count-derived bit width), exactly like the
-    embedding near-dup entry."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    n = table_row_count(sf_dir, "embeddings")  # footer, no count job (r19)
-    nb = similarity.lsh_planes_for(
-        n, HARDNEG_CELL_OCC,
-        min_planes=HARDNEG_MIN_PLANES, max_planes=HARDNEG_MAX_PLANES,
-    )
-    probes = emb.filter(F.col("vec_id") < N_PROBES)
-    return similarity.hard_negatives_cells(
-        emb, probes, "vec_id", "embedding", "label",
-        dim=EMB_DIM, k=TOPK_K, max_sim=HARDNEG_MAX_SIM,
-        nprobe=HARDNEG_NPROBE, n_planes=nb,
-    )
-
-
-def _hardneg_cells_oracle() -> str:
-    """Replays the full cell-routed pipeline in SQL: the sign-LSH cell
-    bits use the SAME md5-derived hyperplane constants
-    (similarity.deterministic_planes), the centroid/routing CTEs are
-    the _ivf_oracle pattern grouped by cell instead of label.  The
-    plane count is derived from ``count(*)`` in the params CTE with
-    the same integer rule as ``lsh_planes_for`` and the cell id is the
-    MAX_PLANES signature masked down (prefix-stable family, so the
-    masked signature IS the derived-plane cell id)."""
-    planes = similarity.deterministic_planes(HARDNEG_MAX_PLANES, EMB_DIM, 0)
-    bits = " + ".join(
-        f"CASE WHEN list_inner_product(e, {plane!r}::DOUBLE[]) >= 0"
-        f" THEN {1 << p} ELSE 0 END"
-        for p, plane in enumerate(planes)
-    )
-    return f"""
-WITH params AS (
-    SELECT coalesce(
-        min(CASE WHEN (CAST(1 AS BIGINT) << g.b) * {HARDNEG_CELL_OCC} >= nn.n
-                 THEN (CAST(1 AS BIGINT) << g.b) END),
-        (CAST(1 AS BIGINT) << {HARDNEG_MAX_PLANES})) AS m
-    FROM generate_series({HARDNEG_MIN_PLANES}, {HARDNEG_MAX_PLANES}) AS g(b),
-         (SELECT count(*) AS n FROM embeddings) nn
-), v AS (
-    SELECT vec_id, label, embedding::DOUBLE[] AS e,
-           sqrt(list_inner_product(embedding::DOUBLE[], embedding::DOUBLE[])) AS nrm
-    FROM embeddings
-), cells AS (
-    SELECT vec_id, label, e, nrm,
-           ({bits}) % (SELECT m FROM params) AS cell FROM v
-), cent AS (
-    SELECT cell,
-           list(round(avg_val, 6) ORDER BY i) AS centroid
-    FROM (
-        SELECT cell, i, avg(e[i]) AS avg_val
-        FROM cells, generate_series(1, {EMB_DIM}) AS g(i)
-        GROUP BY cell, i
-    )
-    GROUP BY cell
-), probes AS (
-    SELECT vec_id AS query_id, label AS query_label, e AS qv, nrm AS qn
-    FROM cells WHERE vec_id < {N_PROBES}
-), routed AS (
-    -- zero-norm guard mirrors the operator: cosine only when both
-    -- norms are positive, else the -2.0 sentinel (below any real
-    -- cosine) so ties fall to cell-ascending order deterministically
-    SELECT query_id, query_label, qv, qn, cell,
-           row_number() OVER (
-               PARTITION BY query_id
-               ORDER BY CASE WHEN qn * sqrt(list_inner_product(centroid, centroid)) > 0
-                             THEN round(list_inner_product(qv, centroid)
-                                        / (qn * sqrt(list_inner_product(centroid, centroid))), 6)
-                             ELSE -2.0 END DESC,
-                        cell ASC
-           ) AS r
-    FROM probes, cent
-), probe_cells AS (
-    SELECT query_id, query_label, qv, qn, cell FROM routed WHERE r <= {HARDNEG_NPROBE}
-), scored AS (
-    SELECT p.query_id, p.query_label,
-           c.vec_id AS neighbor_id, c.label AS neighbor_label,
-           round(list_inner_product(p.qv, c.e) / (p.qn * c.nrm), 6) AS sim
-    FROM probe_cells p
-    JOIN cells c ON c.cell = p.cell AND c.label <> p.query_label
-), capped AS (
-    SELECT * FROM scored WHERE sim < {HARDNEG_MAX_SIM!r}
-), ranked AS (
-    SELECT *,
-           row_number() OVER (PARTITION BY query_id
-                              ORDER BY sim DESC, neighbor_id ASC) AS rank
-    FROM capped
-)
-SELECT query_id, query_label, neighbor_id, neighbor_label,
-       CAST(rank AS BIGINT) AS rank, sim
-FROM ranked WHERE rank <= {TOPK_K}
-"""
-
-
-def hardneg_cells_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-probe recall of the cell-routed hard-negative tier against
-    the exact tier — completes the audit symmetry (every approximate
-    tier in the catalog carries an engine-exact recall audit: IVF,
-    LSH, bitext cells, and now hard-negative cells).  Negatives only
-    count as hits if the cells tier surfaced the SAME neighbor id;
-    both tiers are deterministic, so DuckDB replays the recall to the
-    integer.  At 100 TB this is the nprobe/n_planes tuning loop for
-    contrastive-data mining runs."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    probes = emb.filter(F.col("vec_id") < N_PROBES)
-    exact = similarity.hard_negatives(
-        emb, probes, "vec_id", "embedding", "label",
-        k=TOPK_K, max_sim=HARDNEG_MAX_SIM,
-    ).select("query_id", "neighbor_id")
-    # the same entry being audited, self-sized planes included
-    cells = hard_negative_mining_cells(spark, sf_dir).select(
-        "query_id", "neighbor_id", F.lit(1).alias("hit")
-    )
-    return (
-        exact.join(cells, ["query_id", "neighbor_id"], "left")
-        .groupBy("query_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_exact"),
-            F.coalesce(F.sum("hit"), F.lit(0)).cast("long").alias("n_hit"),
-        )
-        .select(
-            "query_id",
-            "n_exact",
-            "n_hit",
-            F.expr("n_hit * 100 div n_exact").alias("recall_pct"),
-        )
-    )
-
-
-def _hardneg_recall_oracle() -> str:
-    return f"""
-WITH exact_neg AS ({HARD_NEGATIVES_ORACLE}),
-cells_neg AS ({_hardneg_cells_oracle()})
-SELECT e.query_id,
-       count(*) AS n_exact,
-       CAST(sum(CASE WHEN c.neighbor_id IS NOT NULL THEN 1 ELSE 0 END)
-            AS BIGINT) AS n_hit,
-       CAST(sum(CASE WHEN c.neighbor_id IS NOT NULL THEN 1 ELSE 0 END) * 100
-            // count(*) AS BIGINT) AS recall_pct
-FROM exact_neg e
-LEFT JOIN cells_neg c
-  ON c.query_id = e.query_id AND c.neighbor_id = e.neighbor_id
-GROUP BY e.query_id
-"""
-
-
 #: --- Hard-negative mining over sign-LSH multiprobe candidates (r16,
 #: VERDICT r15 #3: "extend Hamming-1 multiprobe + per-plane table
 #: derivation to the hardneg tier") ------------------------------------
 #:
-#: The cells tier routes probes by CENTROID similarity over
+#: The retired cells tier routed probes by CENTROID similarity over
 #: single-table sign-LSH cells — centroids of hyperplane regions are
 #: arbitrary geometry, the same decorrelation failure mode the bitext
 #: decomposition quantified for k-means cells.  This tier generates
@@ -1458,10 +906,9 @@ FROM ranked WHERE rank <= {TOPK_K}
 
 def hardneg_lsh_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-probe recall of the LSH-multiprobe hard-negative tier vs
-    the exact tier — same schema as hardneg_cells_recall_audit so the
-    two scale tiers compare row-for-row (the r16 acceptance rows for
-    the VERDICT r15 #3 extension).  Deterministic both sides, DuckDB
-    replays to the integer."""
+    the exact tier (the r16 acceptance rows for the VERDICT r15 #3
+    extension).  Deterministic both sides, DuckDB replays to the
+    integer."""
     emb = load_table(spark, sf_dir, "embeddings")
     probes = emb.filter(F.col("vec_id") < N_PROBES)
     exact = similarity.hard_negatives(
@@ -1668,54 +1115,6 @@ WHERE a.query_id < a.neighbor_id
 """
 
 
-def embedding_semdedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SemDeDup-style semantic dup clusters (Abbas et al. 2023 shape)
-    over the batch ANN graph: mutual k-NN edges at/above the near-dup
-    cosine threshold -> connected components -> canonical (min) id
-    per clustered vector.  Composition of three existing scale ops —
-    the GEMM k-NN graph, the mutuality join, and the min-label
-    components loop (same machinery as `dedup_clusters`) — so the
-    whole semantic-dedup pipeline never touches vectors after the
-    one bucket exchange.
-
-    Components use the large/small-star variant (r19): the
-    SF10_SEMDEDUP_R19 decade audit caught label propagation
-    exhausting its round budget on chained threshold graphs and
-    silently returning unconverged labels — star converges in
-    O(log n) rounds and is the 100 TB-correct default for this
-    pipeline; outputs are identical on converged inputs
-    (property-pinned)."""
-    edges = similarity_lsh_knngraph_mutual(spark, sf_dir).filter(
-        F.col("sim") >= COSINE_DUP_THRESHOLD
-    )
-    return dedup.connected_components(edges, algorithm="star").select(
-        F.col("node").alias("vec_id"), "cluster_id"
-    )
-
-
-def _semdedup_clusters_oracle() -> str:
-    mutual = _lsh_knngraph_mutual_oracle().strip()
-    return f"""
-WITH RECURSIVE mutual AS (
-{mutual}
-), edges AS (
-    SELECT id_a, id_b FROM mutual WHERE sim >= {COSINE_DUP_THRESHOLD}
-), sym AS (
-    SELECT id_a AS src, id_b AS dst FROM edges
-    UNION
-    SELECT id_b AS src, id_a AS dst FROM edges
-), reach(node, label) AS (
-    SELECT src, src FROM sym
-    UNION
-    SELECT s.src, r.label
-    FROM sym s JOIN reach r ON s.dst = r.node
-)
-SELECT node AS vec_id, min(label) AS cluster_id
-FROM reach
-GROUP BY node
-"""
-
-
 def embedding_semdedup_keepers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SemDeDup KEEPER POLICY (VERDICT r18 #7 — the half of Abbas et
     al. 2023 the cluster entry alone lacks): per semantic-dup
@@ -1798,11 +1197,12 @@ def embedding_semdedup_certified(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Semantic-dup clusters with CERTIFIED edge recall — the
     production semantic-dedup path at scale (r19).
 
-    The graph-composition entry (`embedding_semdedup_clusters`) rides
-    the ANN serving tier, whose contract is candidate OVERSAMPLING,
-    not recall (`lsh_topk_overlap_audit` records the gap); at decade
-    scale its per-pair hit rate at the 0.45 dup threshold collapses
-    (T=2 tables, no multiprobe — measured in SF*_SEMDEDUP_R19).  This
+    Composing the clusters from the ANN serving tier's k-NN graph
+    instead (the retired graph-composition entry) reads 0.3-0.4% edge
+    recall: that tier's contract is candidate OVERSAMPLING, not recall
+    (`lsh_topk_overlap_audit` records the gap), and at decade scale
+    its per-pair hit rate at the 0.45 dup threshold collapses (T=2
+    tables, no multiprobe — measured in SF*_SEMDEDUP_R19).  This
     entry derives the SAME logical object — mutual-k-NN edges at the
     dup threshold, min-label components — from the certified near-dup
     tier instead, whose >= 85%-recall-at-threshold floor is
@@ -3933,10 +3333,6 @@ NORTHSTAR_QUERIES = [
      _lsh_knngraph_mutual_oracle(),
      "mutual k-NN edges (semantic-dedup / diversity graph): pair-keyed "
      "self-join of the k-NN graph, id_a < id_b canonical"),
-    ("embedding_semdedup_clusters", embedding_semdedup_clusters,
-     _semdedup_clusters_oracle(),
-     "SemDeDup-style clusters: mutual k-NN edges at the near-dup "
-     "threshold -> min-label connected components"),
     ("embedding_semdedup_keepers", embedding_semdedup_keepers,
      _semdedup_keepers_oracle(),
      "SemDeDup keeper policy over the CERTIFIED clusters: one kept "
@@ -4019,17 +3415,6 @@ NORTHSTAR_QUERIES = [
      "REAL PNG decode, stdlib-only: CRC'd chunk walk + zlib inflate + unfilter"),
     ("bitext_margin_mining", bitext_margin_mining, BITEXT_MARGIN_ORACLE,
      "LASER/CCMatrix margin bitext mining: mutual k-NN + ratio margin, int-quantized"),
-    ("bitext_margin_mining_cells", bitext_margin_mining_cells, BITEXT_MARGIN_CELLS_ORACLE,
-     "bitext mining scale shape: same-cell shuffle-join candidates, identical margin tail"),
-    ("bitext_cells_recall_audit", bitext_cells_recall_audit,
-     BITEXT_CELLS_RECALL_ORACLE,
-     "cells-tier bitext recall/precision vs the exact tier, engine-exact"),
-    ("bitext_margin_mining_cells_kmeans", bitext_margin_mining_cells_kmeans,
-     _bitext_kmeans_cells_sql(),
-     "bitext cells tier over LEARNED k-means cells (geometry, not metadata)"),
-    ("bitext_kmeans_recall_audit", bitext_kmeans_recall_audit,
-     _bitext_kmeans_recall_oracle(),
-     "learned-quantizer bitext recall vs exact — the re-clustering acceptance test"),
     ("bitext_margin_mining_lsh", bitext_margin_mining_lsh,
      _bitext_lsh_oracle(),
      "bitext mining over sign-LSH Hamming-1 multiprobe candidates — the scale path"),
@@ -4047,12 +3432,6 @@ NORTHSTAR_QUERIES = [
      "LSH top-k tier exact-overlap — records the oversampling contract, not recall"),
     ("hard_negative_mining", hard_negative_mining, HARD_NEGATIVES_ORACLE,
      "contrastive-training prep: top-k different-label neighbors below the positive cap"),
-    ("hard_negative_mining_cells", hard_negative_mining_cells,
-     _hardneg_cells_oracle(),
-     "hard-negative scale shape: sign-LSH cells + nprobe routing, no probe broadcast"),
-    ("hardneg_cells_recall_audit", hardneg_cells_recall_audit,
-     _hardneg_recall_oracle(),
-     "cells-tier hard-negative recall vs the exact tier, engine-exact"),
     ("multimodal_pcm_stats", multimodal_pcm_stats, PCM_STATS_ORACLE,
      "REAL 16-bit PCM decode of the WAV data chunk: int16 sample stats"),
     ("corpus_prep_pipeline", corpus_prep_pipeline, _corpus_prep_oracle(),

@@ -1089,28 +1089,6 @@ def kmeans_quantized_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def km_k_for(n: int, target_occupancy: int, k_min: int = 2, k_max: int = 4096) -> int:
-    """Cluster count for a TARGET CELL OCCUPANCY — the k-means
-    counterpart of :func:`mg_capacity` / ``similarity.lsh_planes_for``
-    (VERDICT r13 #1: a k pinned at the small-corpus value makes cell
-    occupancy n/k grow linearly and the within-cell candidate join
-    quadratic — the real sf1 run measured 36.6x wall for 10x data at
-    fixed k=10 vs 5.74x with k scaled).
-
-    ``k = clamp(ceil(n / target_occupancy), k_min, k_max)`` in pure
-    integer arithmetic, so an external engine replays the derivation
-    exactly (``GREATEST(k_min, LEAST(k_max, (n + occ - 1) // occ))``).
-    ``k_max`` bounds the per-iteration driver sync at k x dim ints —
-    4096 x 64 int64s is a ~2 MB broadcast, still the canonical
-    k-means discipline.
-    """
-    if target_occupancy <= 0:
-        raise ValueError(f"target_occupancy must be > 0, got {target_occupancy}")
-    if not (0 < k_min <= k_max):
-        raise ValueError(f"bad k bounds [{k_min}, {k_max}]")
-    return max(k_min, min(k_max, (n + target_occupancy - 1) // target_occupancy))
-
-
 def _km_fit(
     spark: SparkSession,
     sf_dir: str,
@@ -1120,10 +1098,8 @@ def _km_fit(
 ):
     """Run the ``KM_ITERS``-iteration Lloyd loop and return
     ``(qdf, centroids, assign_pass)`` — the quantized vectors, the
-    FINAL centroid list, and the assignment strategy — so callers can
-    take the standard nearest-cell assignment
-    (:func:`_km_final_assignment`) or the IVF multi-assignment
-    (:func:`_km_assign_multiprobe`) over the same fit.
+    FINAL centroid list, and the assignment strategy that
+    :func:`_km_final_assignment` applies once more.
 
     ``route=None`` auto-selects: brute-force n x k assignment below
     ``KM_ROUTE_MIN_K``, coarse-cell routing (``_km_assign_routed``,
@@ -1185,117 +1161,11 @@ def _km_final_assignment(
     return assign_pass(qdf, centroids)
 
 
-def _km_assign_multiprobe(
-    qdf: DataFrame,
-    centroids: list[tuple[int, list[int]]],
-    nprobe: int,
-    route: bool = False,
-    g: int | None = None,
-) -> DataFrame:
-    """IVF MULTI-ASSIGNMENT: each vector routed to its ``nprobe``
-    nearest centroids (exact int64 squared L2, ties to the lowest
-    centroid id) — one (vec_id, cluster) row per probe cell.
-
-    This is the recall lever the single-assignment cells tiers lack
-    (VERDICT r13 #2): a pair whose two sides straddle a cell boundary
-    is invisible to a same-cell join, but probing the source side into
-    its nprobe nearest cells recovers exactly the near-boundary mass —
-    the same multi-assignment that lifted the IVF ANN audit's recall
-    (ann_recall_audit: 30 -> 94 across nprobe widths).
-
-    Determinism: distances are the k-means family's exact int64
-    arithmetic; ``argsort(kind='stable')`` over centroid columns in
-    ascending-cid order breaks ties to the lowest cid — the same rule
-    as ``row_number() OVER (ORDER BY dist_sq ASC, cid ASC)``, so
-    DuckDB replays the routing with ``rn <= nprobe``.
-
-    ``route=True`` is the large-k path (k >= KM_ROUTE_MIN_K, the
-    :func:`_km_assign_routed` discipline): the point first finds its
-    nearest of g coarse seeds (n x g), then its top-nprobe FINE
-    centroids within that seed's cell (n x k/g) — approximate by the
-    same contract as routed single-assignment (a true top-nprobe
-    centroid in another coarse cell is missed), deterministic at both
-    levels, and degenerating to exact brute force at g=1 (pytest pins
-    the equivalence).
-    """
-    import math
-
-    import numpy as np
-
-    if route and g is None:
-        g = max(1, math.isqrt(len(centroids)))
-
-    cids = np.array([cid for cid, _ in centroids], dtype=np.int64)
-    fmat = np.array([cv for _, cv in centroids], dtype=np.int64)  # k x dim
-
-    if not route:
-        cmat = fmat.T  # dim x k
-        cnorm = (fmat * fmat).sum(axis=1)
-
-        def assign(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                q = np.stack(pdf["qv"].to_numpy()).astype(np.int64)  # B x dim
-                d = (q * q).sum(axis=1, keepdims=True) - 2 * (q @ cmat) + cnorm
-                npk = min(nprobe, d.shape[1])
-                # stable sort over cid-ascending columns => ties -> lowest cid
-                idx = np.argsort(d, axis=1, kind="stable")[:, :npk]
-                yield pd.DataFrame(
-                    {
-                        "vec_id": np.repeat(pdf["vec_id"].to_numpy(), npk),
-                        "cluster": cids[idx].reshape(-1),
-                    }
-                )
-
-        return qdf.mapInPandas(assign, schema="vec_id bigint, cluster bigint")
-
-    gmat, cell_of = _coarse_cells(centroids, g)
-    n_cells = gmat.shape[0]
-    gT = gmat.T
-    gnorm = (gmat * gmat).sum(axis=1)
-    cells = [np.nonzero(cell_of == j)[0] for j in range(n_cells)]
-    cell_T = [fmat[ids].T for ids in cells]  # ids ascending -> stable=lowest cid
-    cell_norm = [(fmat[ids] * fmat[ids]).sum(axis=1) for ids in cells]
-
-    def assign_routed(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            q = np.stack(pdf["qv"].to_numpy()).astype(np.int64)
-            qn = (q * q).sum(axis=1, keepdims=True)
-            coarse = (qn - 2 * (q @ gT) + gnorm).argmin(axis=1)
-            out_vec: list[np.ndarray] = []
-            out_cl: list[np.ndarray] = []
-            for j in range(n_cells):
-                m = coarse == j
-                if not m.any():
-                    continue
-                dj = qn[m] - 2 * (q[m] @ cell_T[j]) + cell_norm[j]
-                npk = min(nprobe, dj.shape[1])
-                idx = np.argsort(dj, axis=1, kind="stable")[:, :npk]
-                out_vec.append(np.repeat(pdf["vec_id"].to_numpy()[m], npk))
-                out_cl.append(cids[cells[j][idx]].reshape(-1))
-            if out_vec:
-                yield pd.DataFrame(
-                    {
-                        "vec_id": np.concatenate(out_vec),
-                        "cluster": np.concatenate(out_cl),
-                    }
-                )
-
-    return qdf.mapInPandas(assign_routed, schema="vec_id bigint, cluster bigint")
-
-
-def _kmeans_ctes(k: int | str = KM_K) -> list[str]:
+def _kmeans_ctes(k: int = KM_K) -> list[str]:
     # CTE chain shared by the k-means and SemDeDup oracles; the final
     # assignment CTE is a{KM_ITERS - 1} with (vec_id, qv, cluster,
     # dist_sq).  Assignment expression against a centroid CTE named
     # `cname`: nearest centroid id (ties -> lowest id), its distance.
-    # ``k`` may be a SQL scalar expression (string) instead of an int
-    # — the self-sizing replay path: the seed CTE then takes the first
-    # rn <= (k) rows instead of a literal LIMIT, so the cluster count
-    # can be derived from count(*) inside the query itself.
     def assign(cname: str) -> str:
         dist = (
             "list_sum(list_transform(range(1, {d} + 1), "
@@ -1322,12 +1192,6 @@ def _kmeans_ctes(k: int | str = KM_K) -> list[str]:
             "c0 AS (SELECT CAST(row_number() OVER (ORDER BY vec_id) - 1 AS BIGINT)"
             " AS cid, qv AS cv FROM (SELECT vec_id, qv FROM q ORDER BY vec_id"
             f" LIMIT {k}))"
-            if isinstance(k, int)
-            else (
-                "c0 AS (SELECT CAST(rn - 1 AS BIGINT) AS cid, qv AS cv FROM "
-                "(SELECT vec_id, qv, row_number() OVER (ORDER BY vec_id) AS rn"
-                f" FROM q) WHERE rn <= ({k}))"
-            )
         ),
         f"a0 AS ({assign('c0')})",
     ]
@@ -1430,7 +1294,7 @@ def kcenter_coreset(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     try:
         n_rows = table_row_count(sf_dir, "embeddings")
-    except OSError:
+    except (OSError, ValueError):  # pyarrow's ArrowInvalid is a ValueError
         n_rows = None  # non-parquet layout: fall through to the loop
     cap = int(
         spark.conf.get(KC_ARROW_MAX_ROWS_CONF, str(KC_DEFAULT_ARROW_MAX_ROWS))

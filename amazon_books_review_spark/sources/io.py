@@ -240,20 +240,29 @@ def table_row_count(sf_dir: str, name: str) -> int:
     ``df.count()`` inside every ANN catalog entry is an extra
     full-scan action per query; at 100 TB that is a real job, while
     the footer answer is a metadata read).  Handles both a single
-    file and a directory of part files (sum of footers).  Cached per
-    (sf_dir, name): the driver test tables are immutable fixture
-    files — callers pointing this at mutating paths should call
+    file and a directory of part files, nested or hive-partitioned:
+    the sum of footers over every file Spark would scan, skipping
+    ``_``/``.``-prefixed entries (``_SUCCESS``, ``_temporary/``,
+    checksum sidecars).  A file that is not parquet raises pyarrow's
+    ``ArrowInvalid`` (a ``ValueError``).  Cached per (sf_dir, name):
+    the driver test tables are immutable fixture files — callers
+    pointing this at mutating paths should call
     ``table_row_count.cache_clear()`` between generations."""
     import pyarrow.parquet as pq
 
     path = os.path.join(sf_dir, f"{name}.parquet")
-    if os.path.isdir(path):
-        return sum(
-            pq.ParquetFile(os.path.join(path, f)).metadata.num_rows
-            for f in sorted(os.listdir(path))
-            if f.endswith(".parquet")
+    if not os.path.isdir(path):
+        return pq.ParquetFile(path).metadata.num_rows
+    hidden = ("_", ".")
+    total = 0
+    for root, dirs, files in os.walk(path):
+        dirs[:] = [d for d in dirs if not d.startswith(hidden)]
+        total += sum(
+            pq.ParquetFile(os.path.join(root, f)).metadata.num_rows
+            for f in files
+            if not f.startswith(hidden)
         )
-    return pq.ParquetFile(path).metadata.num_rows
+    return total
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

@@ -425,7 +425,7 @@ def stream_join_salts_for(
     hot_share: float, partitions: int, cap_ratio: float = 2.0
 ) -> int:
     """Salt count for a TARGET SKEW TOLERANCE — the streaming
-    counterpart of ``mg_capacity`` / ``lsh_planes_for`` / ``km_k_for``
+    counterpart of ``mg_capacity`` / ``lsh_planes_for``
     (r14: every capacity constant in the catalog derives from its
     question-level parameter).
 

@@ -294,28 +294,15 @@ HEADLINE += [
     # round-13: stdlib PNG decode (zlib inflate + unfilter)
     "multimodal_png_pixel_stats",
     "multimodal_pcm_stats",
-    # round-12 bitext mining — the candidate-bounded scale shape only
-    # (bitext_margin_mining is the exact all-pairs verify tier,
-    # excluded like dedup_ngram_jaccard / cosine_neardup_pairs)
-    "bitext_margin_mining_cells",
+    # bitext_margin_mining is the exact all-pairs verify tier,
+    # excluded like dedup_ngram_jaccard / cosine_neardup_pairs
     "hard_negative_mining",
-    # round-13: the cell-routed hard-negative scale shape (no probe
-    # broadcast).  The recall audits (bitext_cells_recall_audit,
-    # bitext_kmeans_recall_audit, hardneg_cells_recall_audit) are NOT
-    # benched: their exact-tier arm is the quadratic audit harness,
-    # excluded like lsh_recall_audit / dedup_ngram_jaccard.
-    "hard_negative_mining_cells",
-    # round-13: bitext cells over LEARNED k-means cells — same
-    # candidate shape as bitext_margin_mining_cells plus the bounded
-    # k-means assignment (k x dim centroid sync only)
-    "bitext_margin_mining_cells_kmeans",
     # round-16: the sign-LSH Hamming-1 multiprobe mining shapes — the
-    # recommended scale paths now that the r15 decomposition showed
-    # the cells tier's recall collapse is structural (PERF.md r16 #1).
-    # Their recall audits (bitext_lsh_recall_audit,
-    # hardneg_lsh_recall_audit, lsh_topk_overlap_audit) carry the
-    # quadratic exact arm and stay appendix-only, like the cells-tier
-    # audits above.
+    # scale paths (the r15 decomposition showed the cells tier's
+    # recall collapse is structural, PERF.md r16 #1).  Their recall
+    # audits (bitext_lsh_recall_audit, hardneg_lsh_recall_audit,
+    # lsh_topk_overlap_audit) carry the quadratic exact arm and stay
+    # appendix-only, like lsh_recall_audit / dedup_ngram_jaccard.
     "bitext_margin_mining_lsh",
     "hard_negative_mining_lsh",
     # round-17: the forced Hamming-<=2 tier (symmetric radius-1
@@ -330,11 +317,6 @@ HEADLINE += [
     # self-join.
     "similarity_lsh_knngraph",
     "similarity_lsh_knngraph_mutual",
-    # SemDeDup composition: mutual edges at the near-dup threshold ->
-    # min-label components (iterative driver loop, like
-    # label_propagation_communities — benched for the wall, no static
-    # plan budget)
-    "embedding_semdedup_clusters",
     # round-19: the certified-recall semantic-dedup path (edges from
     # the adaptive near-dup tier, mutual-k-NN computed exactly on the
     # threshold pair set) and the SemDeDup keeper policy (one kept

@@ -1,21 +1,16 @@
-"""r19: decade measurement of the SEMANTIC-DEDUP pipelines (VERDICT
+"""r19: decade measurement of the SEMANTIC-DEDUP pipeline (VERDICT
 r18 #1) — wall + peak disk + cluster-quality audit at 200k/500k
 vectors on the seeded r17/r18 fixtures (seed 4242, the same corpora
 the near-dup recall certifications ran on).
 
-TWO compositions of the same logical object (mutual-k-NN edges at the
-dup threshold -> min-label components) are measured side by side:
-
-- ``graph``: the catalog composition `similarity_lsh_knngraph ->
-  similarity_lsh_knngraph_mutual -> threshold filter -> components`
-  (`embedding_semdedup_clusters`).  Its edge generator is the ANN
-  SERVING tier (T=2 tables, no multiprobe, candidate-oversampling
-  contract) — the audit quantifies what that contract means for
-  threshold-pair recall at decade scale.
-- ``certified``: `embedding_semdedup_certified`'s shape — edges from
-  the adaptive near-dup tier (plan-derived >= 85% recall floor,
-  measured 92-93% at these decades), mutual-k-NN computed exactly on
-  the threshold pair set (rank window + pair-count mutuality).
+The measured composition is `embedding_semdedup_certified`'s shape:
+mutual-k-NN edges at the dup threshold -> min-label components, with
+edges from the adaptive near-dup tier (plan-derived >= 85% recall
+floor, measured 92-93% at these decades) and mutual-k-NN computed
+exactly on the threshold pair set (rank window + pair-count
+mutuality).  The recorded SF*_SEMDEDUP_R19.json files also carry a
+``graph`` arm (edges from the ANN serving tier's k-NN graph, 0.3-0.4%
+edge recall); that composition has left the catalog and this script.
 
 The EXACT reference is a numpy brute-force mutual-k-NN restricted to
 edges incident to the first-2000-id stratum (the same stratum every
@@ -26,8 +21,8 @@ stratum's top-k union, so the restricted edge set is complete.
 Ranking replays the engine rule exactly: round-6 cosine DESC, id ASC,
 self excluded; edges filtered at the dup threshold.
 
-Reported per composition: stage walls, edge counts, stratum-incident
-edge recall/precision vs exact, and co-cluster agreement (fraction of
+Reported: stage walls, edge counts, stratum-incident edge
+recall/precision vs exact, and co-cluster agreement (fraction of
 exact mutual edges whose endpoints the composition assigns to one
 cluster — transitive closure can co-cluster endpoints of a missed
 edge, so this is the end-to-end semantic-dedup quality number).
@@ -219,38 +214,7 @@ results = {
     "n_exact_mutual_edges": len(exact_edges), "exact_arm_sec": exact_sec,
 }
 
-# ------------------------------------------------- composition A: graph
-nb_g = similarity.lsh_planes_for(
-    N, nq.LSH_TOPK_OCC,
-    min_planes=nq.LSH_TOPK_MIN_PLANES, max_planes=nq.LSH_TOPK_MAX_PLANES,
-)
-t0 = time.time()
-mutual = nq.similarity_lsh_knngraph_mutual(spark, EMB_DIR)
-mutual.persist()
-n_mutual = mutual.count()
-mutual_sec = round(time.time() - t0, 2)
-t0 = time.time()
-g_edges = mutual.filter(F.col("sim") >= THRESHOLD).select("id_a", "id_b")
-g_edges.persist()
-n_g_edges = g_edges.count()
-g_clusters = dedup.connected_components(g_edges, algorithm="star").select(
-    F.col("node").alias("vec_id"), "cluster_id"
-)
-g_clusters.persist()
-n_g_members = g_clusters.count()
-n_g_clusters = g_clusters.select("cluster_id").distinct().count()
-g_cluster_sec = round(time.time() - t0, 2)
-results["graph"] = {
-    "derived_planes": nb_g, "n_tables": nq.LSH_TABLES,
-    "mutual_edges_total": n_mutual,
-    "threshold_edges_total": n_g_edges,
-    "clustered_vectors": n_g_members, "n_clusters": n_g_clusters,
-    "graph_mutual_sec": mutual_sec, "cluster_sec": g_cluster_sec,
-    **_audit(g_edges, g_clusters, "graph"),
-}
-mutual.unpersist()
-
-# -------------------------------------------- composition B: certified
+# ------------------------------------------------------------ certified
 nb_c = similarity.lsh_planes_for(
     N, nq.NEARDUP_LSH_OCC,
     min_planes=nq.NEARDUP_LSH_MIN_PLANES,

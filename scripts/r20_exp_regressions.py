@@ -1,5 +1,5 @@
 #!/usr/bin/env python3
-"""EXP (r20 opt): resolve VERDICT r19's three robust regressions with
+"""EXP (r20 opt): resolve VERDICT r19's robust regressions with
 interleaved same-session A/Bs (the box drifts ~2x within a day, so
 cross-run comparisons cannot adjudicate them).
 
@@ -8,11 +8,7 @@ cross-run comparisons cannot adjudicate them).
    checkpointed); B = the r18 shape reconstructed (repartition("dst")
    before the edge checkpoint, n_nodes via distinct().count(), ranks
    derived without the node checkpoint).
-2. embedding_semdedup_clusters 2.11 -> 3.33/2.65.  A = HEAD (r19 star
-   loop: size-adaptive ls checkpoint, count carry-forward, left-anti
-   containment); B = the r18 star loop (re-count both sides per round,
-   subtract-based containment) on the same upstream mutual edges.
-3. streaming_stream_stream_join_salted 2.43 -> 3.45/2.95 (untouched
+2. streaming_stream_stream_join_salted 2.43 -> 3.45/2.95 (untouched
    in r19).  No alternate shape exists; A/B = salted vs unsalted
    (the skew-hardening surcharge), interleaved, to separate operator
    cost from session drift.
@@ -35,7 +31,6 @@ if str(REPO) not in sys.path:
 from pyspark.sql import functions as F
 
 import bench
-from amazon_books_review_spark.functions import dedup
 from amazon_books_review_spark.operators.joins import broadcast_if_small
 from amazon_books_review_spark.operators.windows import global_top_k
 from amazon_books_review_spark.plans.scale_ops_queries import (
@@ -44,11 +39,6 @@ from amazon_books_review_spark.plans.scale_ops_queries import (
     PR_TOP,
     copurchase_edges,
     pagerank_copurchase,
-)
-from amazon_books_review_spark.plans.northstar_queries import (
-    COSINE_DUP_THRESHOLD,
-    embedding_semdedup_clusters,
-    similarity_lsh_knngraph_mutual,
 )
 from amazon_books_review_spark.sources.io import load_table
 from amazon_books_review_spark.session import get_session
@@ -141,74 +131,6 @@ def pagerank_degjoin(spark, sf_dir):
     )
 
 
-def _cc_star_r18(pairs, id_a="id_a", id_b="id_b", max_iter=30):
-    """connected_components_star with the r18 loop body (two count
-    jobs per round, subtract containment, unconditional per-round
-    checkpoint of small_star output only)."""
-    raw = (
-        pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
-        .filter(F.col("src") != F.col("dst"))
-    )
-    edges = (
-        raw.select(
-            F.greatest("src", "dst").alias("src"),
-            F.least("src", "dst").alias("dst"),
-        )
-        .distinct()
-        .localCheckpoint()
-    )
-
-    def large_star(e):
-        sym = e.unionByName(
-            e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-        )
-        mins = sym.groupBy("src").agg(F.min("dst").alias("_min_nbr"))
-        m = F.least(F.col("_min_nbr"), F.col("src")).alias("m")
-        with_m = sym.join(mins, "src").select("src", "dst", m)
-        return (
-            with_m.filter(F.col("dst") > F.col("src"))
-            .select(F.col("dst").alias("src"), F.col("m").alias("dst"))
-            .filter(F.col("src") != F.col("dst"))
-            .distinct()
-        )
-
-    def small_star(e):
-        mins = e.groupBy("src").agg(F.min("dst").alias("m"))
-        joined = e.join(mins, "src")
-        return (
-            joined.filter(F.col("dst") != F.col("m"))
-            .select(F.col("dst").alias("src"), F.col("m").alias("dst"))
-            .unionByName(mins.select("src", F.col("m").alias("dst")))
-            .distinct()
-        )
-
-    for _ in range(max_iter):
-        new_edges = small_star(large_star(edges)).localCheckpoint()
-        same = (
-            new_edges.count() == edges.count()
-            and new_edges.subtract(edges).limit(1).count() == 0
-        )
-        edges = new_edges
-        if same:
-            break
-    roots = edges.select(F.col("dst").alias("node")).distinct()
-    return (
-        edges.select(F.col("src").alias("node"), F.col("dst").alias("cluster_id"))
-        .unionByName(roots.select("node", F.col("node").alias("cluster_id")))
-        .groupBy("node")
-        .agg(F.min("cluster_id").alias("cluster_id"))
-    )
-
-
-def semdedup_clusters_r18(spark, sf_dir):
-    edges = similarity_lsh_knngraph_mutual(spark, sf_dir).filter(
-        F.col("sim") >= COSINE_DUP_THRESHOLD
-    )
-    return _cc_star_r18(edges).select(
-        F.col("node").alias("vec_id"), "cluster_id"
-    )
-
-
 def main() -> None:
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -235,8 +157,6 @@ def main() -> None:
         "pagerank_HEAD": pagerank_copurchase,
         "pagerank_r18": pagerank_r18,
         "pagerank_degjoin": pagerank_degjoin,
-        "semclusters_HEAD": embedding_semdedup_clusters,
-        "semclusters_r18": semdedup_clusters_r18,
         "ssj_salted": streaming_stream_stream_join_salted,
         "ssj_unsalted": streaming_stream_stream_join,
     }
@@ -247,9 +167,6 @@ def main() -> None:
         assert pa.reset_index(drop=True).equals(
             pb.reset_index(drop=True)
         ), f"pagerank mismatch: {alt.__name__}"
-    ca = embedding_semdedup_clusters(spark, warmup).toPandas().sort_values("vec_id")
-    cb = semdedup_clusters_r18(spark, warmup).toPandas().sort_values("vec_id")
-    assert ca.reset_index(drop=True).equals(cb.reset_index(drop=True)), "clusters mismatch"
     print("value identity OK at sf0.001", file=sys.stderr)
 
     shots: dict[str, list[float]] = {k: [] for k in variants}

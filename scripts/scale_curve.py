@@ -59,19 +59,11 @@ QUERIES = [
     # row measures the derived config; the fixed-4-planes config
     # measured 48x at 10x in BENCH_SF1 (VERDICT r13 #1).
     "embedding_neardup_lsh_verified",
-    # r14: k derived from corpus size (occupancy 50) + nprobe=2 source
-    # multi-assignment; the fixed-k=10 config measured 36.6x at 10x.
-    "bitext_margin_mining_cells_kmeans",
     # r14 (VERDICT r13 #6): both decontam tiers — eval grams AND corpus
     # grow with the salted REPx corpus; the claim is one linear corpus
     # pass with a broadcast-bounded probe in both tiers.
     "decontam_against_eval",
     "decontam_hashed_prefilter",
-    # r14: self-sized sign-LSH cells (planes ~ log2(n)) — per-probe
-    # candidate volume (nprobe x occupancy) should stay flat while the
-    # corpus grows; probes are a fixed id-range, so wall should be
-    # dominated by the linear cell/centroid pass.
-    "hard_negative_mining_cells",
     # r14: self-sized top-k LSH (planes ~ log2(n), occupancy 8): same
     # flat-per-probe claim as above for the bucketed top-k shape.
     "similarity_lsh_topk",
@@ -258,35 +250,13 @@ QUERIES = [
     # PSI is one conditional-sum pass over orders (scale REPx) + a
     # band-sized window — the label_drift_kl shape on a numeric column
     "psi_price_drift",
-    # round-12 bitext mining, cell-candidate form.  The synthesis
-    # keeps the label (cell) cardinality FIXED while embeddings grow
-    # REPx, so per-cell occupancy grows REPx and the same-cell
-    # candidate join grows REP^2 — the curve measures exactly the
-    # quadratic-at-fixed-cells failure the docstring's IVF posture
-    # (cells ~ n, occupancy flat) exists to prevent; the sign-flip
-    # decorrelation keeps cross-replica pairs below the margin
-    # threshold so OUTPUT grows ~REPx while candidate work shows the
-    # cell-sizing cost.
-    "bitext_margin_mining_cells",
     # round-12 REAL decodes: Arrow-batched full-content decode over
     # Catalyst-built payloads — linear map stages, the curve pins it
     "multimodal_pixel_stats",
     "multimodal_pcm_stats",
-    # round-13: hard-negative cells tier — sign-LSH cells are FIXED
-    # cardinality (2^3), so like bitext_margin_mining_cells the
-    # same-cell candidate join is the quantity under test: probes are
-    # a fixed N_PROBES set, so candidate volume grows with per-cell
-    # occupancy (~REPx), and the curve certifies the no-broadcast
-    # shuffle join stays linear in that volume.
-    "hard_negative_mining_cells",
     # round-13: stdlib PNG decode (zlib inflate + unfilter per
     # scanline in Arrow batches) — linear map stage like the BMP path
     "multimodal_png_pixel_stats",
-    # round-13: learned-quantizer bitext tier — k-means assignment is
-    # bounded (k x dim centroid sync); the candidate join carries the
-    # same fixed-cell-count occupancy-squared term as the label-cell
-    # tier (cells ~ n at a real deployment), measured for parity
-    "bitext_margin_mining_cells_kmeans",
 ]
 
 # Optional filter: scale_curve.py [REP] [query ...]
@@ -356,43 +326,6 @@ def _semdedup_kscaled(k: int):
     return run
 
 
-def _bitext_kmeans_kscaled(k: int):
-    """The bitext kmeans-cells tier with production k-scaling: cell
-    count grows with the corpus so per-cell occupancy (the only
-    quadratic term in the same-cell candidate join) stays constant —
-    the fixed-k catalog entry measures the worst case, this one the
-    deployed shape.  Past KM_ROUTE_MIN_K the k-means assignment
-    itself auto-switches to coarse-cell routing, so the scaled point
-    also exercises the routed clustering path."""
-
-    def run(spark, sf_dir):
-        from pyspark.sql import functions as F
-
-        from amazon_books_review_spark.functions import similarity
-        from amazon_books_review_spark.plans.northstar_queries import (
-            BITEXT_K,
-            BITEXT_MARGIN,
-        )
-        from amazon_books_review_spark.plans.scale_ops_queries import (
-            _km_final_assignment,
-        )
-        from amazon_books_review_spark.sources.io import load_table
-
-        emb = load_table(spark, sf_dir, "embeddings")
-        cells = _km_final_assignment(spark, sf_dir, k=k).select(
-            "vec_id", F.col("cluster").alias("km_cell")
-        )
-        emb_k = emb.join(cells, "vec_id")
-        src = emb_k.filter(F.col("vec_id") % 2 == 0)
-        tgt = emb_k.filter(F.col("vec_id") % 2 == 1)
-        return similarity.margin_bitext_pairs_cells(
-            src, tgt, "vec_id", "embedding", "km_cell",
-            k=BITEXT_K, margin_threshold=BITEXT_MARGIN,
-        )
-
-    return run
-
-
 def _plane_scaled_entries() -> dict[str, dict[str, object]]:
     import math
 
@@ -405,10 +338,6 @@ def _plane_scaled_entries() -> dict[str, dict[str, object]]:
         "semdedup_kscaled": {
             "1x": _semdedup_kscaled(25),
             f"{REP}x": _semdedup_kscaled(25 * REP),
-        },
-        "bitext_kmeans_kscaled": {
-            "1x": _bitext_kmeans_kscaled(10),
-            f"{REP}x": _bitext_kmeans_kscaled(10 * REP),
         },
     }
 

@@ -62,23 +62,18 @@ QUERIES = [
     "gopher_repetition_rules",
     "bigram_logprob_score",
     "incremental_agg_orders",
-    # r14: the self-sized bitext kmeans tier joins the battery — its
-    # fixed-k predecessor was the 36.6x-at-10x outlier this round fixed
-    "bitext_margin_mining_cells_kmeans",
     # r16: the sign-LSH multiprobe miners + the entries the shared
     # one-matmul signature kernel re-touched (PERF.md r16 #1-#3)
     "bitext_margin_mining_lsh",
     "hard_negative_mining_lsh",
-    "hard_negative_mining_cells",
     "similarity_lsh_topk",
     # r18: the forced Hamming-<=2 near-dup tier (partition-local
     # transport) and the batch ANN k-NN graph (gemm strategy)
     "embedding_neardup_lsh_probe2",
     "similarity_lsh_knngraph",
-    # r19: the mutual-edge graph + both semantic-dedup compositions
+    # r19: the mutual-edge graph, the certified semantic-dedup path
     # and the keeper policy
     "similarity_lsh_knngraph_mutual",
-    "embedding_semdedup_clusters",
     "embedding_semdedup_certified",
     "embedding_semdedup_keepers",
     # r20: the entries this optimization round touched ...

@@ -245,7 +245,6 @@ PLAN_BUDGETS: dict[str, tuple] = {
     # r19: star components truncate lineage per round, so the final
     # plan is the label agg over checkpoint leaves — pure narrow
     # exchanges, no join operator survives
-    "embedding_semdedup_clusters": (4, 0, 0),
     "embedding_semdedup_certified": (4, 0, 0),
     # keeper policy: norms attach (BHJ at test scale, SMJ at 100 TB
     # would be fine too — both sides narrow), then rank + kept-id
@@ -261,9 +260,6 @@ PLAN_BUDGETS: dict[str, tuple] = {
     # fan-out (cosine_topk's shape); one window shuffle per direction
     # (3 physical exchanges: broadcast + 2 window hashpartitionings)
     "bitext_margin_mining": (6, 0, 2),
-    # scale shape: same-cell equi-join candidates (broadcast at test
-    # sf, shuffle at scale) + the two window partitionings
-    "bitext_margin_mining_cells": (8, 0, 0, 2),
     # r12 hard negatives: cosine_topk's shape (probe BNLJ + 1 window)
     "hard_negative_mining": (4, 0, 2),
     # the 2 SMJs are one logical merge join on (orderkey, salt) — the

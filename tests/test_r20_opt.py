@@ -28,6 +28,70 @@ def test_kcenter_arrow_arm_matches_distributed_loop(spark):
     assert arrow == dist
 
 
+def _kcenter_rows(spark, sf_dir):
+    from amazon_books_review_spark.plans.scale_ops_queries import kcenter_coreset
+
+    return sorted(map(tuple, kcenter_coreset(spark, sf_dir).collect()))
+
+
+def test_kcenter_gate_counts_nested_part_files(spark, tmp_path, monkeypatch):
+    """A hive-partitioned embeddings directory must not read as 0 rows
+    at the driver-arm gate: the footer count walks nested part files
+    (skipping ``_``/``.`` entries), so a table over the cap takes the
+    distributed loop instead of being fetched whole to the driver."""
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    from amazon_books_review_spark.plans import scale_ops_queries as so
+    from amazon_books_review_spark.sources.io import table_row_count
+
+    expected = _kcenter_rows(spark, SF_SMOKE)
+    tbl = pq.read_table(f"{SF_SMOKE}/embeddings.parquet")
+    root = tmp_path / "embeddings.parquet"
+    for label in pc.unique(tbl["label"]).to_pylist():
+        part = root / f"label={label}"
+        part.mkdir(parents=True)
+        sub = tbl.filter(pc.equal(tbl["label"], label)).drop_columns(["label"])
+        pq.write_table(sub, part / "part-0000.parquet")
+        (part / ".part-0001.parquet.inprogress").write_bytes(b"not parquet")
+    (root / "_SUCCESS").write_bytes(b"")
+    (root / "_temporary").mkdir()
+    (root / "_temporary" / "part-9999.parquet").write_bytes(b"not parquet")
+
+    assert table_row_count(str(tmp_path), "embeddings") == tbl.num_rows
+
+    def driver_arm(_tbl):
+        raise AssertionError("table over the cap fetched to the driver")
+
+    monkeypatch.setattr(so, "_kcenter_greedy_driver", driver_arm)
+    spark.conf.set(so.KC_ARROW_MAX_ROWS_CONF, str(tbl.num_rows - 1))
+    try:
+        assert _kcenter_rows(spark, str(tmp_path)) == expected
+    finally:
+        spark.conf.unset(so.KC_ARROW_MAX_ROWS_CONF)
+
+
+def test_kcenter_gate_falls_through_on_non_parquet_part(spark, tmp_path):
+    """A part file pyarrow cannot read (``ArrowInvalid``, a
+    ``ValueError``) must send kcenter to the distributed loop, not fail
+    the query at the gate: under ``ignoreCorruptFiles`` Spark itself
+    skips the file, so the query answers from the readable parts."""
+    import shutil
+
+    root = tmp_path / "embeddings.parquet"
+    root.mkdir()
+    shutil.copy(f"{SF_SMOKE}/embeddings.parquet", root / "part-0000.parquet")
+    (root / "part-0001.parquet").write_bytes(b"truncated upload")
+    expected = _kcenter_rows(spark, SF_SMOKE)
+    conf = "spark.sql.files.ignoreCorruptFiles"
+    prev = spark.conf.get(conf)
+    spark.conf.set(conf, "true")
+    try:
+        assert _kcenter_rows(spark, str(tmp_path)) == expected
+    finally:
+        spark.conf.set(conf, prev)
+
+
 def test_funnel_fusion_matches_composed_form(spark):
     """r20: corpus_filter_funnel fuses the three verdict scans into one
     projection (two doc-grain shuffle joins removed).  The fused rows

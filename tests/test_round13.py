@@ -243,126 +243,6 @@ def test_signature_cell_range_and_determinism(spark):
     assert vals == [r["cell"] for r in cells.collect()]  # deterministic
 
 
-def test_hard_negatives_cells_contract(spark):
-    """Cells tier keeps the exact tier's contract: no same-label
-    neighbor, nothing at/above the cap, dense ranks by sim desc."""
-    from amazon_books_review_spark.functions import similarity
-
-    df = spark.createDataFrame(
-        _emb_rows(40), "vec_id long, label int, embedding array<double>"
-    )
-    probes = df.filter("vec_id < 3")
-    out = similarity.hard_negatives_cells(
-        df, probes, "vec_id", "embedding", "label",
-        dim=6, k=4, max_sim=0.95, nprobe=2, n_planes=3,
-    ).collect()
-    assert out
-    by_q = {}
-    for r in out:
-        assert r["neighbor_label"] != r["query_label"]
-        assert r["sim"] < 0.95
-        by_q.setdefault(r["query_id"], []).append(r)
-    for rows in by_q.values():
-        rows.sort(key=lambda r: r["rank"])
-        assert [r["rank"] for r in rows] == list(range(1, len(rows) + 1))
-        sims = [r["sim"] for r in rows]
-        assert sims == sorted(sims, reverse=True)
-        assert len(rows) <= 4
-
-
-def test_hard_negatives_cells_full_nprobe_equals_exact(spark):
-    """Routing to ALL cells (nprobe = 2^n_planes) makes the candidate
-    set the whole different-label corpus, so the cells tier must equal
-    the exact tier row for row — the approximation is ONLY the cell
-    bound, never the scoring tail."""
-    from amazon_books_review_spark.functions import similarity
-
-    df = spark.createDataFrame(
-        _emb_rows(40, seed=7), "vec_id long, label int, embedding array<double>"
-    )
-    probes = df.filter("vec_id < 4")
-    exact = similarity.hard_negatives(
-        df, probes, "vec_id", "embedding", "label", k=3, max_sim=0.95
-    )
-    cells = similarity.hard_negatives_cells(
-        df, probes, "vec_id", "embedding", "label",
-        dim=6, k=3, max_sim=0.95, nprobe=8, n_planes=3,
-    )
-    key = lambda r: (r["query_id"], r["rank"])  # noqa: E731
-    e = sorted((r.asDict() for r in exact.collect()), key=key)
-    c = sorted((r.asDict() for r in cells.collect()), key=key)
-    assert e == c
-
-
-def test_bitext_recall_audit_invariants(spark):
-    """n_hit bounded by both tiers; integer percentages consistent."""
-    from amazon_books_review_spark.plans.northstar_queries import (
-        bitext_cells_recall_audit,
-    )
-
-    (row,) = bitext_cells_recall_audit(spark, "/root/testdata/sf0.001").collect()
-    assert 0 <= row["n_hit"] <= min(row["n_exact"], row["n_cells"])
-    assert row["recall_pct"] == row["n_hit"] * 100 // row["n_exact"]
-    assert row["precision_pct"] == row["n_hit"] * 100 // row["n_cells"]
-
-
-def test_hard_negatives_cells_plan_never_forces_probe_broadcast(spark):
-    """The scale claim in code: the candidate join on the cell id
-    carries NO broadcast hint.  At sf0.001 the cost-based optimizer
-    legitimately broadcasts the tiny probe_cells side, so the
-    testable invariant is counterfactual: with auto-broadcast
-    disabled the join must degrade to a shuffle join — a forced
-    ``F.broadcast(probe_cells)`` (the r12 scale hole) would survive
-    the conf and keep a BroadcastHashJoin on the cell id."""
-    import contextlib
-    import io
-    import re
-
-    from amazon_books_review_spark.plans.catalog import all_queries
-
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        df = all_queries()["hard_negative_mining_cells"](
-            spark, "/root/testdata/sf0.001"
-        )
-        buf = io.StringIO()
-        with contextlib.redirect_stdout(buf):
-            df.explain("formatted")
-        plan = buf.getvalue()
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-    assert re.search(r"SortMergeJoin|ShuffledHashJoin", plan), plan
-    assert "BroadcastHashJoin" not in plan, plan
-    # the centroid routing cross-join stays an explicit broadcast
-    # (2^n_planes rows, deliberate) even with auto-broadcast off
-    assert "BroadcastNestedLoopJoin" in plan, plan
-
-
-def test_bitext_kmeans_recall_no_worse_than_label_cells(spark):
-    """The quantizer-quality claim, asserted: routing bitext cells
-    over LEARNED k-means clusters (geometry) must recall at least as
-    many exact-tier pairs as the label-cell tier (metadata) — and
-    with the nprobe=8 source multi-assignment (r15, measured off the
-    2/4/8 curve: 50/74/96% recall at sf0.01) the bound is a hard
-    FLOOR, not just no-worse-than (VERDICT r13 #2 / r14 #6).  The
-    floor sits below the 96/96 measured point to absorb fixture
-    regeneration, but far above the nprobe=2 ceiling (50) so losing
-    probe width -- or the multiprobe entirely -- fails loudly."""
-    from amazon_books_review_spark.plans.northstar_queries import (
-        bitext_cells_recall_audit,
-        bitext_kmeans_recall_audit,
-    )
-
-    sf = "/root/testdata/sf0.01"
-    (label_row,) = bitext_cells_recall_audit(spark, sf).collect()
-    (km_row,) = bitext_kmeans_recall_audit(spark, sf).collect()
-    assert km_row["n_exact"] == label_row["n_exact"]
-    assert km_row["recall_pct"] >= label_row["recall_pct"]
-    assert km_row["recall_pct"] >= 85, km_row
-    assert km_row["precision_pct"] >= 85, km_row
-
-
 def test_pcm_posw_catches_sample_reversal():
     """count/sum/peak are permutation-invariant over samples; the
     position-weighted sum must differ for reversed sample order."""

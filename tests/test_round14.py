@@ -1,12 +1,11 @@
-"""Round-14 additions (VERDICT r13): self-sizing capacity for the two
-fixed-config ANN catalog entries, nprobe multi-assignment for the
-bitext k-means tier, and the net-of-floor coverage invariant.
+"""Round-14 additions (VERDICT r13): self-sizing capacity for the
+fixed-config ANN catalog entries and the net-of-floor coverage
+invariant.
 
-The sizing rules are DERIVED, not pinned — `lsh_planes_for` and
-`km_k_for` are pure integer arithmetic replayed verbatim by the DuckDB
-oracles, so these tests pin (a) the Python formula's values, (b) the
-Python<->SQL derivation equivalence over a count sweep, and (c) the
-multiprobe assignment's determinism/equivalence contracts.
+The sizing rule is DERIVED, not pinned — `lsh_planes_for` is pure
+integer arithmetic replayed verbatim by the DuckDB oracles, so these
+tests pin (a) the Python formula's values and (b) the Python<->SQL
+derivation equivalence over a count sweep.
 """
 
 from __future__ import annotations
@@ -19,7 +18,6 @@ import duckdb
 import pytest
 
 from amazon_books_review_spark.functions.similarity import lsh_planes_for
-from amazon_books_review_spark.plans.scale_ops_queries import km_k_for
 
 REPO = Path(__file__).resolve().parents[1]
 
@@ -48,21 +46,6 @@ def test_lsh_planes_for_tracks_log2():
         lsh_planes_for(10, 32, min_planes=5, max_planes=4)
 
 
-def test_km_k_for_tracks_corpus_size():
-    # occupancy 50: the bitext kmeans configuration
-    assert km_k_for(500, 50) == 10      # sf0.001/sf0.01 -> the r13 k
-    assert km_k_for(2000, 50) == 40     # sf0.1
-    assert km_k_for(20_000, 50) == 400  # sf1
-    # ceil semantics and clamps
-    assert km_k_for(501, 50) == 11
-    assert km_k_for(1, 50) == 2
-    assert km_k_for(10**9, 50) == 4096
-    with pytest.raises(ValueError):
-        km_k_for(10, 0)
-    with pytest.raises(ValueError):
-        km_k_for(10, 50, k_min=5, k_max=4)
-
-
 @pytest.mark.parametrize("n", [1, 3, 100, 499, 500, 501, 2000, 4096, 20_000,
                                1_000_000, 10**9])
 def test_lsh_mask_sql_matches_python(n):
@@ -89,25 +72,6 @@ def test_lsh_mask_sql_matches_python(n):
         min_planes=NEARDUP_LSH_MIN_PLANES, max_planes=NEARDUP_LSH_MAX_PLANES,
     )
     assert m == 1 << b, (n, m, b)
-
-
-@pytest.mark.parametrize("n", [1, 3, 100, 499, 500, 501, 2000, 20_000,
-                               204_800, 10**9])
-def test_km_k_sql_matches_python(n):
-    from amazon_books_review_spark.plans.northstar_queries import (
-        BITEXT_KM_KMAX,
-        BITEXT_KM_KMIN,
-        BITEXT_KM_OCC,
-    )
-
-    sql = (
-        f"SELECT GREATEST({BITEXT_KM_KMIN}, LEAST({BITEXT_KM_KMAX}, "
-        f"({n} + {BITEXT_KM_OCC} - 1) // {BITEXT_KM_OCC}))"
-    )
-    (k_sql,) = duckdb.sql(sql).fetchone()
-    assert k_sql == km_k_for(
-        n, BITEXT_KM_OCC, k_min=BITEXT_KM_KMIN, k_max=BITEXT_KM_KMAX
-    ), n
 
 
 def test_stream_join_salts_for_caps_hot_partition():
@@ -161,66 +125,6 @@ def test_masked_signature_equals_prefix_signature():
 SF = "/root/testdata/sf0.001"
 
 
-def test_multiprobe_contains_single_assignment(spark):
-    """Probe cell #1 is the nearest centroid, i.e. the single
-    assignment — multiprobe candidates are a strict superset."""
-    from pyspark.sql import functions as F
-
-    from amazon_books_review_spark.plans.scale_ops_queries import (
-        _km_assign_multiprobe,
-        _km_fit,
-    )
-
-    qdf, cents, assign_pass = _km_fit(spark, SF, k=10)
-    single = {
-        r["vec_id"]: r["cluster"] for r in assign_pass(qdf, cents).collect()
-    }
-    multi = (
-        _km_assign_multiprobe(qdf, cents, nprobe=2)
-        .groupBy("vec_id")
-        .agg(F.collect_set("cluster").alias("cells"))
-        .collect()
-    )
-    assert len(multi) == len(single)
-    for r in multi:
-        assert len(r["cells"]) == 2, r
-        assert single[r["vec_id"]] in r["cells"], r
-
-
-def test_multiprobe_routed_g1_equals_brute(spark):
-    """g=1 coarse routing degenerates to exact brute force — the same
-    equivalence pin as routed single-assignment."""
-    from amazon_books_review_spark.plans.scale_ops_queries import (
-        _km_assign_multiprobe,
-        _km_fit,
-    )
-
-    qdf, cents, _ = _km_fit(spark, SF, k=10)
-    brute = sorted(
-        (r["vec_id"], r["cluster"])
-        for r in _km_assign_multiprobe(qdf, cents, nprobe=3).collect()
-    )
-    routed = sorted(
-        (r["vec_id"], r["cluster"])
-        for r in _km_assign_multiprobe(
-            qdf, cents, nprobe=3, route=True, g=1
-        ).collect()
-    )
-    assert brute == routed
-
-
-def test_bitext_kmeans_multiprobe_pairs_are_unique(spark):
-    """Dedup-free by construction: the target side is single-assigned,
-    so a (src, tgt) pair can join through at most one cell even with
-    the source probing nprobe cells."""
-    from amazon_books_review_spark.plans.northstar_queries import (
-        bitext_margin_mining_cells_kmeans,
-    )
-
-    df = bitext_margin_mining_cells_kmeans(spark, SF)
-    assert df.count() == df.select("src_id", "tgt_id").distinct().count()
-
-
 def test_neardup_lsh_audit_precision_is_exact_by_construction(spark):
     """Stage two of the two-stage near-dup tier exact-verifies every
     candidate against the SAME threshold as the exact tier, so every
@@ -237,36 +141,12 @@ def test_neardup_lsh_audit_precision_is_exact_by_construction(spark):
     assert 0 < row["n_lsh"] <= row["n_exact"], row
 
 
-def test_hardneg_cells_planes_self_size(spark):
-    """The hard-negative cell count derives from the corpus: 3 planes
-    at the 500-vector parity corpora (the r13 config, so the green
-    history stays comparable), 5 at sf0.1's 2000."""
-    from amazon_books_review_spark.plans.northstar_queries import (
-        HARDNEG_CELL_OCC,
-        HARDNEG_MAX_PLANES,
-        HARDNEG_MIN_PLANES,
-    )
-
-    def planes(n):
-        return lsh_planes_for(
-            n, HARDNEG_CELL_OCC,
-            min_planes=HARDNEG_MIN_PLANES, max_planes=HARDNEG_MAX_PLANES,
-        )
-
-    assert planes(500) == 3
-    assert planes(2000) == 5
-    assert planes(20_000) == 9
-
-
 def test_zero_norm_vectors_route_deterministically(spark):
     """ADVICE r13: a zero vector used to make the routing cosine
     NULL/NaN with engine-defined ordering; the -2.0 sentinel must make
     routing deterministic and the query must still return well-formed
     results (no NULL sim, probe routed to the ascending-id cells)."""
-    from amazon_books_review_spark.functions.similarity import (
-        hard_negatives_cells,
-        ivf_topk,
-    )
+    from amazon_books_review_spark.functions.similarity import ivf_topk
 
     rows = [(0, [0.0] * 8, "a")] + [
         (i, [float((i * 7 + j * 3) % 5 - 2) for j in range(8)],
@@ -277,23 +157,7 @@ def test_zero_norm_vectors_route_deterministically(spark):
         rows, "vec_id bigint, embedding array<double>, label string"
     )
     probes = df.filter("vec_id = 0")  # THE zero vector probes
-    out = hard_negatives_cells(
-        df, probes, "vec_id", "embedding", "label",
-        dim=8, k=3, max_sim=0.99, nprobe=2, n_planes=2,
-    ).collect()
-    # zero probe => sim = 0/0 would be NULL; the guard keeps routing
-    # deterministic, and the zero-dot cosine itself is NULL-filtered
-    # by the sim < max_sim predicate only when non-NULL — so simply
-    # assert the call is stable and emits no NULL rank/sim pairs
-    for r in out:
-        assert r["rank"] is not None
     # run twice: determinism under re-evaluation
-    out2 = hard_negatives_cells(
-        df, probes, "vec_id", "embedding", "label",
-        dim=8, k=3, max_sim=0.99, nprobe=2, n_planes=2,
-    ).collect()
-    assert sorted(map(str, out)) == sorted(map(str, out2))
-
     ivf = ivf_topk(df, probes, "vec_id", "embedding", "label",
                    dim=8, k=3, nprobe=2).collect()
     ivf2 = ivf_topk(df, probes, "vec_id", "embedding", "label",

@@ -1,6 +1,5 @@
-"""Round-15 regression tests: solo-lane streaming floors, sf1_bench
-argument validation, and the bitext-kmeans oracle-parity scale guard
-(ADVICE r14 medium)."""
+"""Round-15 regression tests: solo-lane streaming floors and sf1_bench
+argument validation."""
 
 from __future__ import annotations
 
@@ -8,7 +7,6 @@ import subprocess
 import sys
 from pathlib import Path
 
-import pyarrow.parquet as pq
 import pytest
 
 REPO = Path(__file__).resolve().parents[1]
@@ -66,40 +64,6 @@ def test_sf1_bench_rejects_unknown_query_names(tmp_path):
     )
     assert proc.returncode != 0
     assert "definitely_not_a_query" in (proc.stderr + proc.stdout)
-
-
-# ---------------------------------------------------------------------------
-# ADVICE r14 medium: the bitext k-means oracle replays the EXACT brute
-# n x k routing; the engine switches to approximate routed assignment
-# at k >= KM_ROUTE_MIN_K.  Parity holds only while every verification
-# corpus derives k BELOW that bound — pin it against the actual
-# parquet footers so a fixture growth breaks loudly here, not as a
-# silent oracle divergence.
-# ---------------------------------------------------------------------------
-
-@pytest.mark.parametrize("sf_dir", ["sf0.001", "sf0.01", "sf0.1"])
-def test_bitext_kmeans_parity_corpora_stay_below_route_bound(sf_dir):
-    from amazon_books_review_spark.plans.northstar_queries import (
-        BITEXT_KM_KMAX,
-        BITEXT_KM_KMIN,
-        BITEXT_KM_OCC,
-    )
-    from amazon_books_review_spark.plans.scale_ops_queries import (
-        KM_ROUTE_MIN_K,
-        km_k_for,
-    )
-
-    path = Path("/root/testdata") / sf_dir / "embeddings.parquet"
-    if not path.exists():
-        pytest.skip(f"{path} absent in this environment")
-    n = pq.read_metadata(path).num_rows
-    k = km_k_for(n, BITEXT_KM_OCC, k_min=BITEXT_KM_KMIN, k_max=BITEXT_KM_KMAX)
-    assert k < KM_ROUTE_MIN_K, (
-        f"{sf_dir}: derived k={k} >= KM_ROUTE_MIN_K={KM_ROUTE_MIN_K} — "
-        "the engine would route approximately while the DuckDB oracle "
-        "replays exact brute assignment; shrink the fixture or raise "
-        "KM_ROUTE_MIN_K with an oracle widening"
-    )
 
 
 # ---------------------------------------------------------------------------
