@@ -1,5 +1,5 @@
 """Reshape / two-sided-group API coverage: the DataFrame ``unpivot``
-(melt) operator and ``cogroup(...).applyInPandas``.
+(melt) operator and ``cogroup(...).applyInArrow``.
 
 Both are catalog queries with exact DuckDB oracles; docstrings record
 when each is the right tool at 100 TB (and when it isn't — cogroup is
@@ -9,6 +9,8 @@ the API of last resort, not a join replacement).
 from __future__ import annotations
 
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -66,20 +68,21 @@ SELECT doc_id, 'distinct_tokens', CAST(distinct_tokens AS BIGINT) FROM wide
 
 
 # ---------------------------------------------------------------------------
-# cogroup.applyInPandas
+# cogroup.applyInArrow
 # ---------------------------------------------------------------------------
 
 
 def cogroup_user_purchase_gap(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Two-sided per-key pairing through ``cogroup(...).applyInPandas``:
+    """Two-sided per-key pairing through ``cogroup(...).applyInArrow``:
     for every user appearing in events OR orders, count their events,
     orders, and how many events fall on-or-before their last order
     date.
 
     THIS result is SQL-expressible (the oracle proves it) — the query
     exists to pin the cogroup API's semantics: both sides shuffle on
-    the key, each key's two Arrow batches arrive in one Python call,
-    and keys missing from either side arrive with an empty frame.
+    the key, each key's two sides arrive in one Python call as
+    ``pyarrow.Table``s, and keys missing from either side arrive as an
+    empty table.
     Reach for cogroup only when the per-key pairing logic genuinely
     exceeds relational algebra (sequence alignment, per-key model
     scoring against a per-key reference set); for anything a join +
@@ -91,16 +94,20 @@ def cogroup_user_purchase_gap(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders side is REDUCED JVM-side to one (n_orders, last_day) row
     per key and DateType is pre-converted to int days on both sides,
     so the per-key Arrow batches carry plain int64 columns and the
-    merge is two numpy comparisons (the production discipline for any
-    applyInPandas: aggregate in Catalyst where algebra allows, cross
-    into Python with the narrowest schema).  Together with the
-    explicit repartition below this cut the query ~6x at sf0.1
-    (21.5s -> ~3s warm): the original shipped DateType detail rows,
-    ran pd.to_datetime twice per key, and let AQE serialize all ~15k
-    Python calls onto one task.
+    merge is one ``pyarrow.compute`` comparison (the production
+    discipline for any grouped-map UDF: aggregate in Catalyst where
+    algebra allows, cross into Python with the narrowest schema).
+    Together with the explicit repartition below this cut the query
+    ~6x at sf0.1 (21.5s -> ~3s warm): the original shipped DateType
+    detail rows, ran pd.to_datetime twice per key, and let AQE
+    serialize all ~15k Python calls onto one task.  ``applyInArrow``
+    rather than ``applyInPandas`` then drops the per-key pandas frame
+    construction, which is most of the Python time when keys are
+    small: at sf0.01 (~1.5k keys, 4 cores) Python run time fell
+    6.3s -> 2.5s with the same bytes crossing the boundary (PERF.md).
     """
     # Explicit partition count on the Python-boundary shuffle: AQE
-    # coalesces exchanges by BYTE size, but a per-key applyInPandas
+    # coalesces exchanges by BYTE size, but a per-key applyInArrow
     # stage's cost is CALL COUNT — at sf0.1 the ~15k single-row keys
     # weigh under one advisory partition, so AQE packs every Python
     # call onto ONE task and serializes the stage.  An explicit
@@ -128,22 +135,19 @@ def cogroup_user_purchase_gap(spark: SparkSession, sf_dir: str) -> DataFrame:
         .repartition(n_parts, "user_id")
     )
 
-    def merge(evts: pd.DataFrame, ords: pd.DataFrame) -> pd.DataFrame:
-        if len(evts):
-            uid = evts["user_id"].iloc[0]
-        else:
-            uid = ords["user_id"].iloc[0]
-        n_events = len(evts)
-        n_orders = int(ords["n_orders"].iloc[0]) if len(ords) else 0
-        if n_orders and n_events:
-            last = int(ords["last_day"].iloc[0])
-            before = int((evts["event_day"].to_numpy() <= last).sum())
-        else:
-            before = 0
-        return pd.DataFrame(
+    def merge(evts: pa.Table, ords: pa.Table) -> pa.Table:
+        uid = (evts if evts.num_rows else ords)["user_id"][0].as_py()
+        n_orders = before = 0
+        if ords.num_rows:
+            n_orders = ords["n_orders"][0].as_py()
+            # null event_day or last_day compares to null, which sum
+            # skips; an all-null (or empty) sum is null, counted as 0
+            hit = pc.less_equal(evts["event_day"], ords["last_day"][0])
+            before = pc.sum(hit).as_py() or 0
+        return pa.table(
             {
                 "user_id": [uid],
-                "n_events": [n_events],
+                "n_events": [evts.num_rows],
                 "n_orders": [n_orders],
                 "n_events_before_last_order": [before],
             }
@@ -152,7 +156,7 @@ def cogroup_user_purchase_gap(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         events.groupBy("user_id")
         .cogroup(orders.groupBy("user_id"))
-        .applyInPandas(
+        .applyInArrow(
             merge,
             schema=(
                 "user_id bigint, n_events bigint, n_orders bigint, "
@@ -252,7 +256,7 @@ RESHAPE_QUERIES = [
     ("unpivot_doc_metrics", unpivot_doc_metrics, UNPIVOT_ORACLE,
      "wide->long melt via the DataFrame unpivot operator (zero shuffle)"),
     ("cogroup_user_purchase_gap", cogroup_user_purchase_gap, COGROUP_ORACLE,
-     "two-sided per-key pairing via cogroup(...).applyInPandas"),
+     "two-sided per-key pairing via cogroup(...).applyInArrow"),
     ("pandas_udf_doc_stats", pandas_udf_doc_stats, PANDAS_UDF_ORACLE,
      "scalar + grouped-agg @pandas_udf on one pipeline"),
 ]

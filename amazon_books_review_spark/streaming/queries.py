@@ -81,8 +81,9 @@ def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     normalization is a projection on top.
     """
     path = f"{sf_dir}/events.parquet"
-    batch = spark.read.parquet(path)
-    reader = spark.readStream.format("parquet").schema(batch.schema)
+    reader = spark.readStream.format("parquet").schema(
+        read_parquet(spark, path).schema
+    )
     if os.path.isdir(path):
         stream = reader.load(path)
     else:
@@ -807,7 +808,7 @@ def streaming_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     stream = (
-        spark.readStream.schema(spark.read.parquet(feed).schema)
+        spark.readStream.schema(read_parquet(spark, feed).schema)
         .option("maxFilesPerTrigger", 1)
         .parquet(feed)
     )
@@ -911,7 +912,7 @@ def streaming_incremental_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         vt.write(merged, note=note)
 
     stream = (
-        spark.readStream.schema(spark.read.parquet(feed).schema)
+        spark.readStream.schema(read_parquet(spark, feed).schema)
         .option("maxFilesPerTrigger", 1)
         .parquet(feed)
     )

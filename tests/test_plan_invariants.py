@@ -580,6 +580,14 @@ def test_sql_udf_inlines_no_python_boundary(spark):
     assert "ArrowEvalPython" not in plan
 
 
+def test_cogroup_crosses_boundary_in_arrow(spark):
+    """The cogroup hands each key's sides to Python as Arrow tables:
+    no per-key pandas frames (its exchange budget is in PLAN_BUDGETS)."""
+    plan = plan_of(spark, "cogroup_user_purchase_gap")
+    assert "FlatMapCoGroupsInArrow" in plan
+    assert "FlatMapCoGroupsInPandas" not in plan
+
+
 def test_bench_stdout_line_fits_driver_tail():
     """The driver keeps only the LAST 2000 chars of bench stdout and
     parses the final line as JSON; the full per-query map overflowed
